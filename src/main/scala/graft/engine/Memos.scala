@@ -35,6 +35,12 @@ object Memos {
   def checkpoint(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true, storageLevel = MemoLevel)
 
+  /** [[checkpoint]] deferred to the first action over the returned frame,
+    * which stores the blocks as it computes them — one job fewer for a
+    * builder that runs its own action over the frame right away. */
+  def deferredCheckpoint(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = false, storageLevel = MemoLevel)
+
   private val clearers =
     new java.util.concurrent.CopyOnWriteArrayList[SparkSession => Unit]()
 

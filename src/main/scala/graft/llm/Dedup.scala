@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, NGram}
 import graft.engine.GraftQuery
+import graft.functions.ShingleExpression
 import graft.operators.RelationalCore.stat
 import graft.sources.Tables
 
@@ -190,14 +191,23 @@ object Dedup {
     * shingle/signature/band/verify stages. Keys include the session so a
     * fresh JVM (or test session) never sees another session's RDD
     * handles; fixture specs that pass their OWN frames keep calling the
-    * underlying functions directly and never touch the memo. */
+    * underlying functions directly and never touch the memo.
+    *
+    * The capped-shingle family is ONE entry, "shingleSigs" = (doc_id, tk,
+    * sig) from [[shingleSigsOf]]; [[corpusCappedShingles]],
+    * [[cappedShingleSets]] and [[minhashSigs]] are projections of it. */
   private val corpusFrameMemo = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]()
 
   private[llm] def corpusFrame(spark: org.apache.spark.sql.SparkSession, dir: String,
       tag: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    corpusFrameMemo.computeIfAbsent((spark, dir, tag),
-      _ => graft.engine.Memos.checkpoint(build))
+    corpusMaterialized(spark, dir, tag)(graft.engine.Memos.checkpoint(build))
+
+  /** [[corpusFrame]] for a builder that materializes its own frame through
+    * [[graft.engine.Memos.checkpoint]] (no second checkpoint on top). */
+  private def corpusMaterialized(spark: org.apache.spark.sql.SparkSession, dir: String,
+      tag: String)(materialized: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    corpusFrameMemo.computeIfAbsent((spark, dir, tag), _ => materialized)
 
   // session-release hook (r11 memo lifecycle): unpersist this session's
   // frames and drop their entries so the storage returns without a JVM
@@ -269,14 +279,22 @@ object Dedup {
         .toDF("doc_id", "cluster_id"))
   }
 
-  /** Memoized corpus-level capped shingle stream
-    * (capShingles(shingleDocs(documents), MaxShingleDf)) — q399/q423/q499
-    * each re-ran the tokenize + explode + distinct + hot-cap per
-    * invocation on top of the (already memoized) pair consumers. */
+  /** Memoized corpus-level (doc_id, tk, sig) — [[shingleSigsOf]] over the
+    * documents table, materialized once per (session, dir). The one memo
+    * behind every capped-shingle consumer: the inverted-index queries
+    * (q399/q423/q499 via [[corpusCappedShingles]]) and the MinHash family
+    * (q371/q372/q385/q396 via [[minhashSigs]] and [[cappedShingleSets]]). */
+  private def corpusShingleSigs(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    corpusMaterialized(spark, dir, "shingleSigs")(
+      shingleSigsOf(Tables.documents(spark, dir), pin = true))
+
+  /** Corpus-level capped (doc_id, s) shingle stream — the
+    * capShingles(shingleDocs(documents), MaxShingleDf) rows, as one explode
+    * of the memoized shingle sets (distinct per doc by construction). */
   private[llm] def corpusCappedShingles(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    corpusFrame(spark, dir, "cappedShingles")(
-      capShingles(shingleDocs(Tables.documents(spark, dir)), MaxShingleDf))
+    corpusShingleSigs(spark, dir).select(col("doc_id"), explode(col("tk")).as("s"))
 
   /** Memoized corpus-level [[contamination]] on the standard doc_id%50
     * eval split — q114, q127 and q349 each re-ran the 5-gram explode +
@@ -385,15 +403,16 @@ object Dedup {
     * [[neardupPairs]] on the verified corpora — which is what keeps the
     * capstones' DuckDB oracles exact while their pair stage runs the
     * sub-quadratic plan. The verify cost is candidate-pair-scale: each
-    * candidate compares its two (checkpointed) capped shingle arrays. */
+    * candidate compares its two capped shingle arrays. Sets and signatures
+    * come from one unpinned [[shingleSigsOf]] plan, so a call leaves no
+    * frame in block-manager storage behind it. */
   private[llm] def neardupPairsLshVerified(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinHashExpression.register(spark)
-    val tk = cappedShingleSetsOf(docs).localCheckpoint()
-    val sig = tk.select($"doc_id",
-      graft.functions.MinHashExpression.minhash64($"tk").as("sig"))
+    val sets = shingleSigsOf(docs, pin = false)
+    val tk = sets.select($"doc_id", $"tk")
+    val sig = sets.select($"doc_id", $"sig")
     val bands = sig
       .withColumn("b", explode(sequence(lit(0), lit(3))))
       .withColumn("bv", slice($"sig", $"b" * 4 + 1, lit(4)))
@@ -434,59 +453,140 @@ object Dedup {
       i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))
   }
 
-  /** Per-doc maxDf-CAPPED 3-gram shingle SET as a sorted array — q45's
-    * exact similarity space ((doc_id, tk) rows → capShingles drops
-    * boilerplate shingles with df > 50). Shared by the MinHash signature
-    * stage, both banded verifies, and MinHashSpec. */
-  private[graft] def cappedShingleSets(
-      spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    // Memoized (r10 verdict item 7): q372, q385 and q396 each re-ran the
-    // tokenize + explode + cap + collect_list per invocation (and q372/q385
-    // then localCheckpoint'ed their private copies). Rides the memoized
-    // (doc_id, s) stream; sort_array makes the set independent of the
-    // checkpointed stream's row order, so the frame is byte-identical to the
-    // old per-caller build. Dependency resolved OUTSIDE the insertion —
-    // computeIfAbsent must never recurse into its own map.
-    val sh = corpusCappedShingles(spark, dir)
-    corpusFrame(spark, dir, "cappedShingleSets")(
-      sh.groupBy(col("doc_id")).agg(sort_array(collect_list(col("s"))).as("tk")))
+  /** The one builder of q45's capped similarity space over any (doc_id,
+    * text, …) frame: (doc_id, tk, sig) — each document's sorted distinct
+    * 3-gram shingle set and its 16-permutation [[graft.functions.MinHash64]]
+    * signature. Row for row it equals the reference chain
+    * `capShingles(shingleDocs(docs), MaxShingleDf)` →
+    * `sort_array(collect_list(s))` → `minhash64` (LlmOpsSpec pins this),
+    * without that chain's explode → distinct → anti-join → regroup:
+    *  - the (doc_id, text) scan is hash-partitioned on doc_id into one
+    *    partition per core — an explicit count, so AQE cannot coalesce it
+    *    back into the single task a one-row-group parquet file yields — and
+    *    each document's set ([[graft.functions.ShingleSet3]], the native
+    *    form of `array_sort(array_distinct(...))` over the shingles) and
+    *    signature come out of the same projection;
+    *  - the df > [[MaxShingleDf]] hot set: [[dfUpperBound]] rules it empty
+    *    in the same job that computes the sets; only a bound above the cap
+    *    runs the exact aggregate. Only a non-empty hot set builds a capped
+    *    projection in the first frame's place: hot shingles leave each
+    *    set, signatures are recomputed, and documents with no shingle left
+    *    are dropped (q45's exclusion rule, as for documents with < 3
+    *    tokens).
+    *
+    * `pin = true` materializes through [[graft.engine.Memos]]: the first
+    * frame by a deferred checkpoint that the bound's job fills, a capped
+    * replacement eagerly, with the first frame unpersisted at once — the
+    * session memo's path ([[corpusShingleSigs]]). `pin = false` returns an
+    * unpinned plan, so an ad-hoc caller leaves no storage behind. */
+  private[graft] def shingleSigsOf(docs: org.apache.spark.sql.DataFrame,
+      pin: Boolean): org.apache.spark.sql.DataFrame = {
+    val spark = docs.sparkSession
+    graft.functions.MinHashExpression.register(spark)
+    ShingleExpression.register(spark)
+    // a separate select keeps tk one projection the kernel reads, instead of
+    // an inlined expression evaluated once per reference
+    def withSig(sets: org.apache.spark.sql.DataFrame) =
+      sets.select(col("doc_id"), col("tk"),
+        graft.functions.MinHashExpression.minhash64(col("tk")).as("sig"))
+    // >= 3 tokens = >= 2 spaces, tested on the text: a filter on the set
+    // itself would be pushed below the exchange as a second kernel call in
+    // the single scan task
+    val built = withSig(docs
+      .select(col("doc_id"), col("text"))
+      .filter(col("text").like("% % %"))
+      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("doc_id"), ShingleExpression.shingleSet(col("text")).as("tk")))
+    // the df bound below is the action that stores the memo
+    val first = if (pin) graft.engine.Memos.deferredCheckpoint(built) else built
+    val hot =
+      if (dfUpperBound(first) <= MaxShingleDf) Set.empty[String]
+      else first.select(explode(col("tk")).as("s"))
+        .groupBy(col("s")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > MaxShingleDf)
+        .collect().map(_.getString(0)).toSet
+    if (hot.isEmpty) first
+    else {
+      // order-preserving filter, so each capped set stays sorted
+      val dropHot = udf((tk: Seq[String]) => tk.filterNot(hot))
+      val capped = withSig(first
+        .select(col("doc_id"), dropHot(col("tk")).as("tk"))
+        .filter(size(col("tk")) > 0))
+      if (!pin) capped
+      else {
+        val stored = graft.engine.Memos.checkpoint(capped)
+        graft.engine.Memos.unpersistFrame(first)
+        stored
+      }
+    }
   }
 
-  /** [[cappedShingleSets]] over any (doc_id, text, …) frame — shared with
-    * the sketch-then-verify pair stage the capstones default to. */
+  /** Cells of [[dfUpperBound]]'s count array (4 MB of ints per task). */
+  private val DfBoundCells = 1 << 20
+
+  /** An upper bound on the document frequency of every shingle in a
+    * (doc_id, tk, …) frame of distinct-per-doc shingle sets, in ONE
+    * shuffle-free job: each task counts its shingles into a fixed array
+    * indexed by their xxHash64, the driver sums the arrays and takes the
+    * largest cell. A cell holds the df of every shingle hashed to it, so
+    * the bound is never below the true maximum; collisions only loosen it
+    * (the driver-tier corpora: max df 25, largest cell 34). A bound above
+    * the cap costs an exact aggregate, never a wrong answer — at a scale
+    * where the cells saturate, every build pays that aggregate. */
+  private def dfUpperBound(sets: org.apache.spark.sql.DataFrame): Int = {
+    val cells = DfBoundCells
+    sets.select(col("tk")).queryExecution.toRdd.mapPartitions { rows =>
+      val c = new Array[Int](cells)
+      rows.foreach { r =>
+        val tk = r.getArray(0)
+        var j = 0
+        while (j < tk.numElements()) {
+          val h = org.apache.spark.sql.catalyst.expressions.XXH64
+            .hashUTF8String(tk.getUTF8String(j), 42L)
+          c((h & (cells - 1)).toInt) += 1
+          j += 1
+        }
+      }
+      Iterator.single(c)
+    }.reduce { (a, b) => var i = 0; while (i < cells) { a(i) += b(i); i += 1 }; a }
+      .max
+  }
+
+  /** Per-doc maxDf-CAPPED 3-gram shingle SET as a sorted array (doc_id,
+    * tk) — q45's exact similarity space, a projection of the memoized
+    * [[corpusShingleSigs]]. Shared by both banded verifies, q396 and
+    * MinHashSpec. */
+  private[graft] def cappedShingleSets(
+      spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    corpusShingleSigs(spark, dir).select(col("doc_id"), col("tk"))
+
+  /** [[cappedShingleSets]] over any (doc_id, text, …) frame, unpinned —
+    * shared with the portable sketch-then-verify pair stage the capstones
+    * default to. */
   private[graft] def cappedShingleSetsOf(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    capShingles(shingleDocs(docs), MaxShingleDf)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("s"))).as("tk"))
+    shingleSigsOf(docs, pin = false).select(col("doc_id"), col("tk"))
 
   /** (doc_id, sig: array<long>[16]) MinHash signatures via the codegen'd
     * [[graft.functions.MinHash64]] kernel over the maxDf-CAPPED 3-gram
-    * shingle set — EXACTLY q45's similarity space, cap included. Shared by
-    * q371 (signature dump), q372 (banded pair join), and q385
-    * (delta-vs-corpus). Two design decisions, both load-bearing at scale:
+    * shingle set — EXACTLY q45's similarity space, cap included; a
+    * projection of the memoized [[corpusShingleSigs]], so one kernel pass
+    * per (session, dir) serves q371 (signature dump), q372 (banded pair
+    * join) and q385 (delta-vs-corpus). Two design decisions:
     * (1) SHINGLES, not unigram token sets — this corpus draws from a
     * ~40-word vocabulary, so unigram-set MinHash degenerates into one
     * giant band bucket (measured: 12.4M candidate pairs at sf0.1, 67 s);
-    * (2) the df > 50 CAP — the corpus contains a ~2400-doc template
-    * family that is one genuine near-dup clique in raw shingle space
-    * (2.8M pairs ≥ 0.8); capping drops the boilerplate shingles exactly
-    * as q45 does, so signatures, buckets, and the verified pair set all
-    * collapse to the capped semantics. Docs whose shingles are all capped
-    * away (or with < 3 tokens) carry no signature — q45's own exclusion
-    * rule. */
-  private[llm] def minhashSigs(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    import spark.implicits._
-    graft.functions.MinHashExpression.register(spark)
-    // Memoized (r10 verdict item 7): q371, q372 and q385 each re-projected
-    // the 16-permutation kernel (and q372/q385 localCheckpoint'ed private
-    // copies so their band self-joins wouldn't run it twice more). One
-    // kernel pass per (session, dir) now serves every consumer.
-    val tk = cappedShingleSets(spark, dir) // resolved outside the insertion
-    corpusFrame(spark, dir, "minhashSigs")(
-      tk.select($"doc_id",
-        graft.functions.MinHashExpression.minhash64($"tk").as("sig")))
-  }
+    * (2) the df > 50 CAP is a GUARD, not a filter this corpus exercises:
+    * no shingle of the sf0.1 documents reaches df > 50 (0 of 27 213
+    * distinct), but a corpus with a boilerplate template family would
+    * otherwise form one giant near-dup clique through its shared
+    * shingles. Capping drops them exactly as q45 does, so signatures,
+    * buckets and the verified pair set keep the capped semantics. Docs
+    * whose shingles are all capped away (or with < 3 tokens) carry no
+    * signature — q45's own exclusion rule. */
+  private[llm] def minhashSigs(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    corpusShingleSigs(spark, dir).select(col("doc_id"), col("sig"))
 
   /** MinHash signature dump (q47's twin for Jaccard space): 16 signed-min
     * permutation hashes per doc, emitted as JSON so the driver's scalar

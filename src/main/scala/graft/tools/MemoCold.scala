@@ -17,14 +17,18 @@ import org.apache.spark.sql.SparkSession
   * (`getRDDStorageInfo`) — the measured storage budget the r10 16g heap
   * bump was papering over (verdict item 5).
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.MemoCold [sfDir]"
+  * Usage: sbt "runMain graft.tools.MemoCold [sfDir]" (SPARK_GRAFT_CPUS
+  * overrides the local thread count, default the host's cores)
   * Output: one JSON line (families + storage) — recorded in
   * OPTIMIZATION_r11.md, never in BENCH.json (the driver protocol is
   * untouched). */
 object MemoCold {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // default: the host's cores — more local threads (and shuffle
+    // partitions) than cores misstates what a build costs on this host
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -39,8 +43,7 @@ object MemoCold {
       "exactClusters" -> "q365_contrastive_negatives",
       "portableSigs" -> "q494_minhash_portable",
       "portablePairs+Clusters" -> "q343_cluster_champion",
-      "cappedShingles" -> "q399_neardup_evidence",
-      "cappedShingleSets+minhashSigs" -> "q372_minhash_banded",
+      "shingleSigs" -> "q372_minhash_banded",
       "contamination" -> "q114_contamination",
       "simhash60" -> "q105_simhash_neardup",
       "coOrderEdges" -> "q154_triangles",

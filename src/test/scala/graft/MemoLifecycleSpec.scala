@@ -33,6 +33,22 @@ class MemoLifecycleSpec extends AnyFunSuite with SparkFixture {
     assert(after == before, "post-release rebuild must reproduce the result")
   }
 
+  test("the MinHash memo family releases back to exactly its pre-build storage") {
+    // RDD ids, not just a count: an earlier suite's non-blocking unpersist
+    // may drop an old entry mid-test, but nothing else adds one
+    def pinnedIds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val s = spark.newSession() // fresh memo key: q371/q372/q399 build cold here
+    val before = pinnedIds
+    for (q <- Seq("q371_minhash_signatures", "q372_minhash_banded", "q399_neardup_evidence"))
+      SparkEntry.queries(q)(s, sf).collect()
+    assert((pinnedIds -- before).nonEmpty, "the MinHash consumers must pin their memo")
+
+    graft.engine.Memos.release(s)
+    // exact, not merely lower: a leaked intermediate frame stays pinned
+    val leaked = pinnedIds -- before
+    assert(leaked.isEmpty, s"release must return every frame the build pinned; left $leaked")
+  }
+
   test("memoized frames store at the serialized memo level") {
     import graft.engine.Memos
     assert(Memos.MemoLevel.useMemory && Memos.MemoLevel.useDisk &&

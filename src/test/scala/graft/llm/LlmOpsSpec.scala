@@ -168,6 +168,57 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
     sh.unpersist(); capped.unpersist()
   }
 
+  test("one-pass shingle-set builder equals the explode/cap/regroup chain row for row") {
+    import spark.implicits._
+    import graft.functions.MinHashExpression
+    MinHashExpression.register(spark)
+    type Row3 = (Long, Seq[String], Seq[Long])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row3] =
+      df.select($"doc_id", $"tk", $"sig").collect()
+        .map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[Long](2))).toSeq.sortBy(_._1)
+    def reference(docs: org.apache.spark.sql.DataFrame): Seq[Row3] =
+      rows(Dedup.capShingles(Dedup.shingleDocs(docs), 50)
+        .groupBy($"doc_id").agg(sort_array(collect_list($"s")).as("tk"))
+        .withColumn("sig", MinHashExpression.minhash64($"tk")))
+    // ids, not a count: an earlier test's non-blocking unpersist may still
+    // drop an old entry while this one runs, but never adds one
+    def pinned: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def rddId(frame: org.apache.spark.sql.DataFrame): Int =
+      frame.queryExecution.logical.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.get
+
+    // cap branch: 80 docs share a boilerplate sentence (df = 90 > 50 for its
+    // shingles once docs 81-90, the bare sentence, join them); docs 81-90
+    // lose every shingle to the cap and doc 91 has < 3 tokens, so all
+    // eleven must be absent
+    val boiler = "the quick brown fox jumps over the lazy dog again and again"
+    val docs = ((1L to 80L).map(i => (i, s"$boiler unique$i marker$i tail$i")) ++
+      (81L to 90L).map(i => (i, boiler)) :+ (91L, "two words"))
+      .toDF("doc_id", "text")
+    val want = reference(docs)
+    assert(want.map(_._1) === (1L to 80L), "fixture must exercise the cap")
+    assert(want.forall(_._2.size == 3), "only the three per-doc tail shingles survive")
+    val before = pinned
+    val memo = Dedup.shingleSigsOf(docs, pin = true)
+    assert(pinned -- before === Set(rddId(memo)),
+      "the capped frame alone stays pinned: the cap releases the first frame")
+    assert(rows(memo) === want)
+    graft.engine.Memos.unpersistFrame(memo)
+    assert((pinned -- before).isEmpty)
+    assert(rows(Dedup.shingleSigsOf(docs, pin = false)) === want)
+    assert((pinned -- before).isEmpty, "the unpinned plan must hold no storage")
+
+    // no-cap branch on the smoke corpus, through the session memo projections
+    val corpus = graft.sources.Tables.documents(spark, sf)
+    val ref = reference(corpus)
+    assert(ref.nonEmpty)
+    assert(rows(Dedup.shingleSigsOf(corpus, pin = false)) === ref)
+    val sets = Dedup.cappedShingleSets(spark, sf)
+      .join(Dedup.minhashSigs(spark, sf), "doc_id")
+    assert(rows(sets) === ref)
+  }
+
   test("banded simhash join returns exactly the hamming<=3 pair set (pigeonhole)") {
     // truth from the q105 signature frame (the portable md5 kernel since
     // r7 — q47's xxh64 kernel has its own bit-equality gate in SimHashSpec)
