@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** One named engine capability: an idiomatic Spark query/pipeline plus — when
   * the operation is SQL-expressible — its ANSI-SQL twin for the driver's
@@ -28,12 +29,45 @@ object GraftQuery {
   /** A query with a DuckDB-verifiable ANSI-SQL twin. */
   def oracled(name: String, oracle: String, doc: String = "")(
       fn: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, fn, Some(oracle.stripMargin.trim), doc)
+    GraftQuery(name, onEngineSession(fn), Some(oracle.stripMargin.trim), doc)
 
   /** Non-SQL-expressible op (approx algorithms, ML fits, streaming, LSH):
     * the driver records a weaker rows-only check; correctness is asserted in
     * ScalaTest instead (SURVEY.md §5.2–5.5). */
   def rowsOnly(name: String, doc: String = "")(
       fn: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, fn, None, doc)
+    GraftQuery(name, onEngineSession(fn), None, doc)
+
+  // lazy: building the catalog must not initialize SQLConf ahead of the session
+  private lazy val IsolationKey = SQLConf.ARTIFACTS_SESSION_ISOLATION_ENABLED.key
+
+  /** `fn` behind the engine's one session hook, which every catalog entry
+    * runs before its body: unless the caller set
+    * `spark.sql.artifact.isolation.enabled` on the session, set it to
+    * `false`. The engine adds no artifacts, so the only effect is on which
+    * class loader compiles generated code.
+    *
+    * Why: Spark 4.1 caches compiled whole-stage and expression classes per
+    * (thread context class loader, source) (`CodeGenerator.compile`). With
+    * per-session artifact isolation on (Spark's default),
+    * `ArtifactManager.withResources` tags each session's jobs with the
+    * session's UUID, and the executor builds a fresh class loader for every
+    * new UUID — every `newSession()`, and every cloned session a streaming
+    * query runs its batches on. Each task-side compile then misses the cache
+    * although the generated source is byte-identical to a cached one: a
+    * fresh-session repeat of q57 recompiled 17 classes, and a second run of
+    * streaming q61 on one session 12. Without isolation the tasks run under
+    * the executor's default loader and hit the cache. Answers cannot
+    * change: the same source compiles, only the loader differs.
+    *
+    * Limit: `ArtifactManager.state` is lazy and reads the setting once, so a
+    * session that already ran a job before its first engine call keeps its
+    * isolated loader; the streaming clones it makes later copy the session
+    * conf and still run without it. */
+  private[graft] def onEngineSession(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (spark, dir) =>
+    if (!spark.sessionState.conf.contains(IsolationKey))
+      spark.conf.set(IsolationKey, false)
+    fn(spark, dir)
+  }
 }

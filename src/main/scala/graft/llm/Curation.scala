@@ -825,7 +825,7 @@ object Curation {
     * combined over (split, source) — the output is dashboard-sized. */
   val q300ExportManifest: GraftQuery = GraftQuery(
     "q300_export_manifest",
-    (spark, dir) => {
+    GraftQuery.onEngineSession { (spark, dir) =>
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
     // DEFAULT = the sub-quadratic PORTABLE sketch-then-verify path (md5

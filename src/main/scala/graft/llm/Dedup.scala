@@ -444,15 +444,6 @@ object Dedup {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** Per-row 3-token shingle array (q45's similarity space, computed as a
-    * projection — no explode): shingle i = tokens[i..i+2] joined by
-    * spaces. Only meaningful for docs with ≥ 3 tokens — callers filter. */
-  private[graft] def shingleArr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val t = split(c, " ")
-    transform(sequence(lit(0), size(t) - 3),
-      i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2), element_at(t, i + 3)))
-  }
-
   /** The one builder of q45's capped similarity space over any (doc_id,
     * text, …) frame: (doc_id, tk, sig) — each document's sorted distinct
     * 3-gram shingle set and its 16-permutation [[graft.functions.MinHash64]]

@@ -163,9 +163,10 @@ object MlExtras {
     * cosine over the learned vectors. Deterministic for fixed data:
     * seed=42 + numPartitions=1 pins the training schedule (the catalog
     * determinism spec fits it twice). The neighbor search is distributed:
-    * probe vectors broadcast (10 rows), the vocabulary frame never collects,
-    * cosine runs on the codegen'd graft_dot kernel, top-3 via a
-    * per-probe rank window. */
+    * probe vectors broadcast (10 rows), the vocabulary vectors (already
+    * driver-resident in the model) enter as a local relation on the
+    * caller's session, cosine runs on the codegen'd graft_dot kernel,
+    * top-3 via a per-probe rank window. */
   val q106Word2vecSynonyms: GraftQuery = GraftQuery.rowsOnly(
     "q106_word2vec_synonyms",
     doc = "Word2Vec(dim=32, seed=42, numPartitions=1) over documents tokens; top-3 cosine neighbors of the 10 most frequent terms") { (spark, dir) =>
@@ -182,7 +183,10 @@ object MlExtras {
       .setVectorSize(32).setMinCount(5).setMaxIter(1)
       .setSeed(42).setNumPartitions(1)
       .fit(toks)
-    val vecs = model.getVectors
+    // getVectors builds its frame on the default session, where graft_dot
+    // may be unregistered: rebind its driver-side rows to this session
+    val vectors = model.getVectors
+    val vecs = spark.createDataFrame(vectors.collectAsList(), vectors.schema)
       .select($"word", vector_to_array($"vector").as("v"))
       .withColumn("nrm", sqrt(dot($"v", $"v")))
     val topTerms = toks.select(explode($"tokens").as("word"))

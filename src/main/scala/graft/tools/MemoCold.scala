@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** HONEST MEMO ACCOUNTING (r10 verdict item 4) — builder-side tool, not a
@@ -11,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   * `spark.newSession()` (a new session object = a new memo key, so pass 1
   * is memo-COLD by construction) and reports cold, warm, and their
   * difference — the memo build cost charged to whichever catalog entry
-  * happens to touch that family first in a full sweep.
+  * happens to touch that family first in a full sweep. Each run also
+  * reports its codegen compiles (`CodegenMetrics`, cache misses only): a
+  * warm run that compiles 0 classes shows the difference is memo build
+  * cost, not recompilation.
   *
   * After all builds it sums the block-manager storage the memos pin
   * (`getRDDStorageInfo`) — the measured storage budget the r10 16g heap
@@ -57,10 +61,12 @@ object MemoCold {
     val fns = graft.SparkEntry.queries
     val rows = families.map { case (family, q) =>
       val s = spark.newSession() // fresh memo key -> pass 1 is memo-cold
-      def once(): Double = {
+      // (seconds, codegen compiles)
+      def once(): (Double, Long) = {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fns(q)(s, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+        ((System.nanoTime() - t0) / 1e9, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
       }
       val cold = once(); val warm = once()
       (family, q, cold, warm)
@@ -68,8 +74,9 @@ object MemoCold {
     val storage = spark.sparkContext.getRDDStorageInfo
     val memBytes = storage.map(_.memSize).sum
     val diskBytes = storage.map(_.diskSize).sum
-    val fam = rows.map { case (f, q, c, w) =>
-      f""""$f":{"query":"$q","cold_sec":$c%.3f,"warm_sec":$w%.3f,"memo_build_sec":${math.max(0, c - w)}%.3f}"""
+    val fam = rows.map { case (f, q, (c, cc), (w, wc)) =>
+      f""""$f":{"query":"$q","cold_sec":$c%.3f,"warm_sec":$w%.3f,""" +
+        f""""memo_build_sec":${math.max(0, c - w)}%.3f,"cold_compiles":$cc,"warm_compiles":$wc}"""
     }.mkString("{", ",", "}")
     println(
       s"""{"metric":"memo_cold","sf":"$sfDir","families":$fam,""" +

@@ -232,4 +232,17 @@ class MlSpec extends AnyFunSuite with SparkFixture {
       val qs = r.getSeq[Double](1); qs(0) <= qs(1)
     }, "q25 must not exceed q75")
   }
+
+  test("q106 Word2Vec synonyms run on a fresh session and match the fixture session") {
+    import org.apache.spark.sql.SparkSession
+    val fresh = spark.newSession()
+    // the session getOrCreate hands out while q106 runs: one that never
+    // registered graft_dot, so a frame built there cannot resolve it
+    val bystander = spark.newSession()
+    SparkSession.setActiveSession(bystander)
+    val got = try MlExtras.q106Word2vecSynonyms.fn(fresh, sf).collect().toSeq
+      finally SparkSession.setActiveSession(spark)
+    val expected = MlExtras.q106Word2vecSynonyms.fn(spark, sf).collect().toSeq
+    assert(got.nonEmpty && got == expected)
+  }
 }
