@@ -180,45 +180,22 @@ object Dedup {
       |                      JOIN sh b ON b.doc_id = c.doc_b AND a.s = b.s
       |          GROUP BY 1, 2),""".stripMargin
 
-  /** Per-(session, dir, tag) memo of corpus-level SHARED frames — the
-    * q312-trainer memoization pattern (r9 verdict watch item) applied to
-    * the pair stage: a full Verify/Bench sweep has q45/q483/q431/q493
-    * recomputing the exact pair set and q127/q343/q398 + the curation
-    * capstones recomputing the portable-LSH verified pair set
-    * independently (~10–15 s per sweep at sf0.1). Each frame is built
-    * once per (SparkSession, data dir) and `localCheckpoint`ed so every
-    * later consumer reads materialized blocks instead of re-running the
-    * shingle/signature/band/verify stages. Keys include the session so a
-    * fresh JVM (or test session) never sees another session's RDD
-    * handles; fixture specs that pass their OWN frames keep calling the
-    * underlying functions directly and never touch the memo.
+  /** [[graft.engine.Memos.memo]] entry `tag` for a corpus-level SHARED
+    * frame, materialized through [[graft.engine.Memos.checkpoint]]: a full
+    * Verify/Bench sweep has q45/q483/q431/q493 recomputing the exact pair
+    * set and q127/q343/q398 + the curation capstones recomputing the
+    * portable-LSH verified pair set independently (~10–15 s per sweep at
+    * sf0.1), so every later consumer reads materialized blocks instead of
+    * re-running the shingle/signature/band/verify stages. Fixture specs
+    * that pass their OWN frames keep calling the underlying functions
+    * directly and never touch the memo.
     *
     * The capped-shingle family is ONE entry, "shingleSigs" = (doc_id, tk,
     * sig) from [[shingleSigsOf]]; [[corpusCappedShingles]],
     * [[cappedShingleSets]] and [[minhashSigs]] are projections of it. */
-  private val corpusFrameMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), org.apache.spark.sql.DataFrame]()
-
   private[llm] def corpusFrame(spark: org.apache.spark.sql.SparkSession, dir: String,
       tag: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    corpusMaterialized(spark, dir, tag)(graft.engine.Memos.checkpoint(build))
-
-  /** [[corpusFrame]] for a builder that materializes its own frame through
-    * [[graft.engine.Memos.checkpoint]] (no second checkpoint on top). */
-  private def corpusMaterialized(spark: org.apache.spark.sql.SparkSession, dir: String,
-      tag: String)(materialized: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    corpusFrameMemo.computeIfAbsent((spark, dir, tag), _ => materialized)
-
-  // session-release hook (r11 memo lifecycle): unpersist this session's
-  // frames and drop their entries so the storage returns without a JVM
-  // restart (Memos.release(spark) fans out to every memo owner).
-  graft.engine.Memos.onRelease { s =>
-    val it = corpusFrameMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { graft.engine.Memos.unpersistFrame(e.getValue); it.remove() }
-    }
-  }
+    graft.engine.Memos.memo(spark, dir, tag)(graft.engine.Memos.checkpoint(build))
 
   /** Memoized corpus-level [[portableMinhashSigs]] (q494/q495/q508 + the
     * portable pair stage all read it). */
@@ -227,15 +204,13 @@ object Dedup {
     corpusFrame(spark, dir, "portableSigs")(
       portableMinhashSigs(Tables.documents(spark, dir)))
 
-  /** Memoized corpus-level [[neardupPairsPortableLshVerified]] — built on
-    * the memoized signatures (computed OUTSIDE the memo insertion so the
-    * ConcurrentHashMap never recurses into itself). */
+  /** Memoized corpus-level [[neardupPairsPortableLshVerified]], built on
+    * the memoized signatures. */
   private[llm] def corpusPortablePairs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val sig = corpusPortableSigs(spark, dir)
+      dir: String): org.apache.spark.sql.DataFrame =
     corpusFrame(spark, dir, "portablePairs")(
-      neardupPairsPortableLshVerified(Tables.documents(spark, dir), Some(sig)))
-  }
+      neardupPairsPortableLshVerified(Tables.documents(spark, dir),
+        Some(corpusPortableSigs(spark, dir))))
 
   /** Memoized corpus-level [[neardupPairs]] (q45's exact pair set). */
   private[llm] def corpusExactPairs(spark: org.apache.spark.sql.SparkSession,
@@ -251,42 +226,38 @@ object Dedup {
     * min-label and star labels are identical by construction (q100 ≡ q109,
     * spec-pinned). */
   private[llm] def corpusExactClusters(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    // resolved OUTSIDE the memo insertion — computeIfAbsent must never
-    // recurse into its own map ("Recursive update")
-    val pairs = corpusExactPairs(spark, dir)
+      dir: String): org.apache.spark.sql.DataFrame =
     corpusFrame(spark, dir, "exactClusters")(
       starComponents(
         Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
-        pairs.select(
+        corpusExactPairs(spark, dir).select(
           org.apache.spark.sql.functions.col("doc_a"),
           org.apache.spark.sql.functions.col("doc_b")))._1
         .toDF("doc_id", "cluster_id"))
-  }
 
   /** Memoized corpus-level cluster labels over the PORTABLE verified pair
     * set — the q300/q343/q349/q398 capstone family each re-ran components
     * over the identical (memoized) pair frame. */
   private[llm] def corpusPortableClusters(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val pairs = corpusPortablePairs(spark, dir) // resolved outside the insertion
+      dir: String): org.apache.spark.sql.DataFrame =
     corpusFrame(spark, dir, "portableClusters")(
       starComponents(
         Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
-        pairs.select(
+        corpusPortablePairs(spark, dir).select(
           org.apache.spark.sql.functions.col("doc_a"),
           org.apache.spark.sql.functions.col("doc_b")))._1
         .toDF("doc_id", "cluster_id"))
-  }
 
   /** Memoized corpus-level (doc_id, tk, sig) — [[shingleSigsOf]] over the
     * documents table, materialized once per (session, dir). The one memo
     * behind every capped-shingle consumer: the inverted-index queries
     * (q399/q423/q499 via [[corpusCappedShingles]]) and the MinHash family
-    * (q371/q372/q385/q396 via [[minhashSigs]] and [[cappedShingleSets]]). */
+    * (q371/q372/q385/q396 via [[minhashSigs]] and [[cappedShingleSets]]).
+    * Not a [[corpusFrame]]: `pin = true` already materializes the frame,
+    * so no second checkpoint goes on top. */
   private def corpusShingleSigs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    corpusMaterialized(spark, dir, "shingleSigs")(
+    graft.engine.Memos.memo(spark, dir, "shingleSigs")(
       shingleSigsOf(Tables.documents(spark, dir), pin = true))
 
   /** Corpus-level capped (doc_id, s) shingle stream — the

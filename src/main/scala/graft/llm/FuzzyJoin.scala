@@ -39,20 +39,15 @@ object FuzzyJoin {
       .orderBy($"c_name").limit(2000)
   }
 
-  /** Per-(session, dir) memo of the ED-≤1 pair set — the corpusFrame
-    * pattern (r9 verdict item 5): five entries (q160 itself, q177's BFS
-    * edges, q270/q275 entity resolution, q282 Fellegi–Sunter) each
-    * re-derived the same FastSS blocking + verify join per invocation.
-    * Unsorted; q160 adds its ORDER BY at release. */
-  private val ed1PairMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   /** q160's core: all (name_a < name_b) pairs at edit distance ≤ 1 among
     * the capped vocabulary, via deletion-neighborhood blocking + exact
-    * re-check. Built once per data dir and localCheckpoint'ed. */
+    * re-check. Memoized per (session, dir) as "ed1Pairs": five entries
+    * (q160 itself, q177's BFS edges, q270/q275 entity resolution, q282
+    * Fellegi–Sunter) each re-derived the same FastSS blocking + verify join
+    * per invocation. Unsorted; q160 adds its ORDER BY at release. */
   def ed1Pairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    ed1PairMemo.computeIfAbsent((spark, dir), _ => {
+    graft.engine.Memos.memo(spark, dir, "ed1Pairs") {
       import spark.implicits._
       val vocab = nameVocab(spark, dir)
       // i = -1 marks the identity variant; i in [0, len) deletes char i+1.
@@ -72,18 +67,7 @@ object FuzzyJoin {
         .distinct()
         .filter(levenshtein($"name_a", $"name_b") <= 1)
         .pipe(graft.engine.Memos.checkpoint)
-    })
-
-  // session-release hook (r11 memo lifecycle)
-  graft.engine.Memos.onRelease { s =>
-    Seq(ed1PairMemo, partPairMemo).foreach { m =>
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 eq s) { graft.engine.Memos.unpersistFrame(e.getValue); it.remove() }
-      }
     }
-  }
 
   /** Edit-distance-≤1 pairs among the first 2000 customer names (the
     * deterministic cap keeps the oracle's all-pairs check tractable at
@@ -642,18 +626,15 @@ object FuzzyJoin {
     * sorted-neighborhood rank-offset candidates, 3n pairs at any scale,
     * measured 1.9× on the same tiers. At 100 TB run q476's shape only on
     * bounded slices (one brand partition at a time); run q506 corpus-wide. */
-  /** Per-(session, dir) memo of the (brand, size-band)-blocked
+  /** Per-(session, dir) memo "partPairDl" of the (brand, size-band)-blocked
     * Damerau-scored pair frame (ida < idb, codegen'd kernel) — q476 (block
     * census + closest pair) and q482 (mutual NN) score the IDENTICAL
     * candidate set and each ran the full 1.6M-pair kernel pass per entry
     * (r10 verdict item 8). Scored once, localCheckpoint'ed; DL is symmetric
     * (Round10Spec's law), so the one ida < idb orientation serves both. */
-  private val partPairMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   private[llm] def partPairDl(
       spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    partPairMemo.computeIfAbsent((spark, dir), _ => {
+    graft.engine.Memos.memo(spark, dir, "partPairDl") {
       import spark.implicits._
       graft.functions.DamerauLevenshtein.register(spark)
       val v = Tables.part(spark, dir).select($"p_partkey".as("id"),
@@ -665,7 +646,7 @@ object FuzzyJoin {
         .select($"brand", $"band", $"ida", $"idb",
           graft.functions.DamerauLevenshtein.damerau($"nma", $"nmb").as("dl"))
         .pipe(graft.engine.Memos.checkpoint)
-    })
+    }
 
   val q476DamerauClosestPairs: GraftQuery = GraftQuery.oracled(
     "q476_damerau_closest_pairs",

@@ -46,21 +46,18 @@ object Similarity {
       .select($"vec_id", $"embedding", l2norm($"embedding").as("nrm"))
   }
 
-  /** Per-(session, dir, k) memo of the seed-42 corpus KMeans model — the
-    * corpusFrame pattern (r9 verdict item 5) applied to the ANN family's
-    * coarse quantizers: q98's IVF, q221's IVF stage, q231's SemDeDup cells,
-    * q117/q122's k=10 profile/sampler and q262's k ∈ {2,4,8,16} sweep each
+  /** Per-(session, dir, k) memo "corpusKmeans-k" of the seed-42 corpus
+    * KMeans model, for the ANN family's coarse quantizers: q98's IVF,
+    * q221's IVF stage, q231's SemDeDup cells, q117/q122's k=10
+    * profile/sampler and q262's k ∈ {2,4,8,16} sweep each
     * re-ran an identical seeded fit per invocation (the fit is the entry's
     * dominant cost — ~1-2 s of driver-looped treeAggregate rounds at
     * sf0.1). Same data, same params, same seed ⇒ the SAME model; fitting it
     * once per (session, dir, k) changes no result. maxIter pinned to the
     * MLlib default (20) so every former call site trains identically. */
-  private val kmeansMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), org.apache.spark.ml.clustering.KMeansModel]()
-
   private[llm] def corpusKmeans(spark: SparkSession, dir: String,
       k: Int): org.apache.spark.ml.clustering.KMeansModel =
-    kmeansMemo.computeIfAbsent((spark, dir, k), _ => {
+    graft.engine.Memos.memo(spark, dir, s"corpusKmeans-$k") {
       import spark.implicits._
       val vecs = normed(spark, dir)
         .withColumn("features", array_to_vector($"embedding"))
@@ -68,7 +65,7 @@ object Similarity {
         .setK(k).setSeed(42).setMaxIter(20)
         .setFeaturesCol("features").setPredictionCol("cell")
         .fit(vecs)
-    })
+    }
 
   /** Brute-force cosine top-5 neighbors for the query set (vec_id < 10):
     * the exact baseline every ANN variant is measured against. */
@@ -342,16 +339,13 @@ object Similarity {
     * Seeded KMeans codebooks → rows-only; LlmOpsSpec proves
     * shortlist ≥ corpus reduces EXACTLY to q48 brute force (the plumbing
     * gate) and gates recall@5 at the production shortlist. */
-  /** Per-(session, dir) memo of the PQ index — the (codes, luts) pair is
-    * identical for every pqTopK caller (fixed M/subDim/kCodes/seeds), and
-    * q140 + q221 each re-trained the 8 codebooks and re-encoded the corpus
-    * per invocation. Both frames are corpus/query-set-sized and
+  /** Per-(session, dir) memo "pqIndex" of the PQ index — the (codes, luts)
+    * pair is identical for every pqTopK caller (fixed M/subDim/kCodes/
+    * seeds), and q140 + q221 each re-trained the 8 codebooks and re-encoded
+    * the corpus per invocation. Both frames are corpus/query-set-sized and
     * localCheckpoint'ed. */
-  private val pqIndexMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
   private[llm] def pqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    pqIndexMemo.computeIfAbsent((spark, dir), _ => {
+    graft.engine.Memos.memo(spark, dir, "pqIndex") {
       import spark.implicits._
       val M = 8; val subDim = 8; val kCodes = 32
       val vecs = normed(spark, dir)
@@ -412,24 +406,7 @@ object Similarity {
       val lutsCp = graft.engine.Memos.checkpoint(luts) // before subs unpersists
       subs.unpersist()
       (codes, lutsCp)
-    })
-
-  // session-release hook (r11 memo lifecycle): kmeans models are
-  // driver-side (no pinned storage) — entries just drop; the PQ frames
-  // unpersist like every other memoized frame.
-  graft.engine.Memos.onRelease { s =>
-    val kit = kmeansMemo.entrySet().iterator()
-    while (kit.hasNext) { if (kit.next().getKey._1 eq s) kit.remove() }
-    val pit = pqIndexMemo.entrySet().iterator()
-    while (pit.hasNext) {
-      val e = pit.next()
-      if (e.getKey._1 eq s) {
-        graft.engine.Memos.unpersistFrame(e.getValue._1)
-        graft.engine.Memos.unpersistFrame(e.getValue._2)
-        pit.remove()
-      }
     }
-  }
 
   private[llm] def pqTopK(
       spark: SparkSession, dir: String, shortlist: Int,

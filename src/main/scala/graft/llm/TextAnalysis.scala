@@ -1445,7 +1445,10 @@ object TextAnalysis {
     * The memo key is the data DIRECTORY: the trainer is a pure function of
     * the parquet under it, so the cached merge list is session-independent
     * plain data. Fixture specs keep calling [[bpeTrain]] directly with
-    * their own frames — only the corpus-dir entries share the cache. */
+    * their own frames — only the corpus-dir entries share the cache.
+    * It stays outside the session registry [[graft.engine.Memos.memo]] on
+    * purpose: a session key would make every fresh session retrain, and
+    * it pins no storage for [[graft.engine.Memos.release]] to return. */
   private val bpeTrainMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(String, String, Long)]]()
   private[llm] def bpeTrainCorpus(spark: org.apache.spark.sql.SparkSession,

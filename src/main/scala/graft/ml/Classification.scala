@@ -43,7 +43,7 @@ object Classification {
     (train, test)
   }
 
-  /** Per-(session, dir) memo of the SEEDED 80/20 split of
+  /** Per-(session, dir) memo "mlSplit" of the SEEDED 80/20 split of
     * [[embeddingFeatures]] — seven entries (q57/q59/q60/q74/q93/q94/q121)
     * each re-read the parquet, re-sorted every partition (randomSplit's
     * determinism sort) and re-sampled the identical split per fit; both
@@ -56,27 +56,11 @@ object Classification {
     * in both variants, then samples by position with the same seed; the
     * r11 preflight diffed all seven confusion matrices against the
     * pre-memo outputs at sf0.01 and sf0.1 (byte-identical). */
-  private val splitMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
   private[ml] def embeddingTrainTest(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    splitMemo.computeIfAbsent((spark, dir), _ => {
+    graft.engine.Memos.memo(spark, dir, "mlSplit") {
       val (train, test) = trainTest(embeddingFeatures(spark, dir))
       (graft.engine.Memos.checkpoint(train), graft.engine.Memos.checkpoint(test))
-    })
-
-  // session-release hook (r11 memo lifecycle)
-  graft.engine.Memos.onRelease { s =>
-    val it = splitMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        graft.engine.Memos.unpersistFrame(e.getValue._1)
-        graft.engine.Memos.unpersistFrame(e.getValue._2)
-        it.remove()
-      }
     }
-  }
 
   /** [[embeddingTrainTest]] with the label binarized at `label >= 5` —
     * the q60/q94 task, derived from the shared split (see memo scaladoc). */

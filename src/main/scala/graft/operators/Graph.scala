@@ -14,21 +14,13 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Per-(session, dir) memo of the shared co-order edge list — the
-    * Dedup.corpusFrame pattern (r9 verdict item 5, the q312-trainer
-    * discipline): nine catalog entries (triangles, PageRank family, LPA,
-    * k-core, Adamic–Adar, WL, k-truss …) each re-derived the same
-    * lineitem self-join + distinct per invocation. Built once per data
-    * dir and localCheckpoint'ed so later consumers read materialized
-    * blocks. Keyed by session so a fresh JVM/test session never sees
-    * another session's RDD handles. */
-  private val coOrderEdgeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   /** Oriented edge list a<b of the co-order part graph; `distinct` collapses
-    * parallel edges from parts co-occurring in many orders. */
+    * parallel edges from parts co-occurring in many orders. Memoized per
+    * (session, dir) as "coOrderEdges": nine catalog entries (triangles,
+    * PageRank family, LPA, k-core, Adamic–Adar, WL, k-truss …) each
+    * re-derived the same lineitem self-join + distinct per invocation. */
   private[operators] def coOrderEdges(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    coOrderEdgeMemo.computeIfAbsent((spark, dir), _ => {
+    graft.engine.Memos.memo(spark, dir, "coOrderEdges") {
       import spark.implicits._
       val li = Tables.lineitem(spark, dir)
         .filter($"l_quantity" >= 40)
@@ -37,25 +29,7 @@ object Graph {
         li.as("x").join(li.as("y"), $"x.k" === $"y.k" && $"x.l_partkey" < $"y.l_partkey")
           .select($"x.l_partkey".as("a"), $"y.l_partkey".as("b"))
           .distinct())
-    })
-
-  // session-release hook (r11 memo lifecycle)
-  graft.engine.Memos.onRelease { s =>
-    val it = coOrderEdgeMemo.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) { graft.engine.Memos.unpersistFrame(e.getValue); it.remove() }
     }
-    val fit = forestMemo.entrySet().iterator()
-    while (fit.hasNext) {
-      val e = fit.next()
-      if (e.getKey._1 eq s) {
-        graft.engine.Memos.unpersistFrame(e.getValue._1)
-        graft.engine.Memos.unpersistFrame(e.getValue._2)
-        fit.remove()
-      }
-    }
-  }
 
   /** Triangle counting via the compact-forward wedge join: with every edge
     * oriented a<b, each triangle {x<y<z} is counted EXACTLY once as
@@ -688,17 +662,15 @@ object Graph {
       .orderBy($"cluster", $"doc_a", $"doc_b")
   }
 
-  /** Per-(session, dir) memo of [[boruvkaForest]] — q409 and q419 both
-    * consume the identical forest (every inner frame is already eagerly
-    * localCheckpoint'ed, so the memo hands out materialized rows); a full
-    * sweep previously ran the log-bounded contraction rounds twice. */
-  private val forestMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]()
-
+  /** Per-(session, dir) memo "boruvkaForest" of [[boruvkaForest]] — q409
+    * and q419 both consume the identical forest (every inner frame is
+    * already eagerly localCheckpoint'ed, so the memo hands out materialized
+    * rows); a full sweep previously ran the log-bounded contraction rounds
+    * twice. */
   private[operators] def boruvkaForestShared(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    forestMemo.computeIfAbsent((spark, dir), _ => boruvkaForest(spark, dir))
+    graft.engine.Memos.memo(spark, dir, "boruvkaForest")(boruvkaForest(spark, dir))
 
   /** q409's core, shared with q419's dendrogram cut: the Borůvka forest
     * (doc_a, doc_b, w) of the q45 near-dup graph plus the final component

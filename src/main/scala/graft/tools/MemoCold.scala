@@ -3,30 +3,48 @@ package graft.tools
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
-/** HONEST MEMO ACCOUNTING (r10 verdict item 4) — builder-side tool, not a
-  * driver surface: the per-(SparkSession, dir) memos make every *reported*
-  * number memo-warm (the bench's min-of-2 always sees pass 2 read
-  * materialized blocks), so the shared-stage BUILD cost vanishes from
-  * BENCH.json. This main measures it explicitly: for one representative
-  * query per memo family it runs the SAME count() action twice on a FRESH
-  * `spark.newSession()` (a new session object = a new memo key, so pass 1
+/** Memo build cost, measured: the [[graft.engine.Memos]] registry makes
+  * every *reported* number memo-warm (the bench's min-of-2 always sees
+  * pass 2 read materialized blocks), so the shared-stage BUILD cost
+  * vanishes from BENCH.json. For each registry key in [[families]] this
+  * main runs the key's representative consumer — the catalog entry that
+  * builds it — with the SAME count() action twice on a FRESH
+  * `spark.newSession()` (a new session = new registry entries, so pass 1
   * is memo-COLD by construction) and reports cold, warm, and their
-  * difference — the memo build cost charged to whichever catalog entry
-  * happens to touch that family first in a full sweep. Each run also
-  * reports its codegen compiles (`CodegenMetrics`, cache misses only): a
-  * warm run that compiles 0 classes shows the difference is memo build
-  * cost, not recompilation.
+  * difference: the build cost charged to whichever catalog entry happens
+  * to touch that key first in a full sweep. Keys that share one
+  * representative are measured together, under their names joined by
+  * "+". Each run also reports its codegen compiles (`CodegenMetrics`,
+  * cache misses only): a warm run that compiles 0 classes shows the
+  * difference is memo build cost, not recompilation.
   *
   * After all builds it sums the block-manager storage the memos pin
-  * (`getRDDStorageInfo`) — the measured storage budget the r10 16g heap
-  * bump was papering over (verdict item 5).
+  * (`getRDDStorageInfo`).
   *
   * Usage: sbt "runMain graft.tools.MemoCold [sfDir]" (SPARK_GRAFT_CPUS
   * overrides the local thread count, default the host's cores)
   * Output: one JSON line (families + storage) — recorded in
-  * OPTIMIZATION_r11.md, never in BENCH.json (the driver protocol is
-  * untouched). */
+  * OPTIMIZATION_r11.md, never in BENCH.json. */
 object MemoCold {
+
+  /** Registry key -> its representative consumer. */
+  val families: Seq[(String, String)] = Seq(
+    "exactPairs" -> "q45_neardup_jaccard",
+    "exactClusters" -> "q365_contrastive_negatives",
+    "portableSigs" -> "q494_minhash_portable",
+    "portablePairs" -> "q343_cluster_champion",
+    "portableClusters" -> "q343_cluster_champion",
+    "shingleSigs" -> "q372_minhash_banded",
+    "contamination" -> "q114_contamination",
+    "simhash60" -> "q105_simhash_neardup",
+    "coOrderEdges" -> "q154_triangles",
+    "boruvkaForest" -> "q409_boruvka_msf",
+    "ed1Pairs" -> "q160_edit_distance_join",
+    "corpusKmeans-10" -> "q117_kmeans_clusters",
+    "pqIndex" -> "q140_knn_pq",
+    "mlSplit" -> "q121_dt_confusion",
+    "partPairDl" -> "q476_damerau_closest_pairs")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // default: the host's cores — more local threads (and shuffle
@@ -41,25 +59,10 @@ object MemoCold {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // one representative consumer per memo family (family -> query name)
-    val families: Seq[(String, String)] = Seq(
-      "exactPairs" -> "q45_neardup_jaccard",
-      "exactClusters" -> "q365_contrastive_negatives",
-      "portableSigs" -> "q494_minhash_portable",
-      "portablePairs+Clusters" -> "q343_cluster_champion",
-      "shingleSigs" -> "q372_minhash_banded",
-      "contamination" -> "q114_contamination",
-      "simhash60" -> "q105_simhash_neardup",
-      "coOrderEdges" -> "q154_triangles",
-      "boruvkaForest" -> "q409_boruvka_msf",
-      "ed1Pairs" -> "q160_edit_distance_join",
-      "corpusKmeans" -> "q117_kmeans_clusters",
-      "pqIndex" -> "q140_knn_pq",
-      "mlSplit" -> "q121_dt_confusion",
-      "partPairDl" -> "q476_damerau_closest_pairs")
-
     val fns = graft.SparkEntry.queries
-    val rows = families.map { case (family, q) =>
+    val byQuery = families.map(_._2).distinct
+      .map(q => (families.collect { case (k, `q`) => k }.mkString("+"), q))
+    val rows = byQuery.map { case (family, q) =>
       val s = spark.newSession() // fresh memo key -> pass 1 is memo-cold
       // (seconds, codegen compiles)
       def once(): (Double, Long) = {

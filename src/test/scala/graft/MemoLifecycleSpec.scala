@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MemoLifecycleSpec extends AnyFunSuite with SparkFixture {
 
   private def pinnedRdds: Int = spark.sparkContext.getRDDStorageInfo.length
+  private def pinnedIds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
   test("memoized corpus frames release their storage and rebuild identically") {
     val s = spark.newSession() // fresh memo key: builds are cold, scoped here
@@ -47,6 +48,31 @@ class MemoLifecycleSpec extends AnyFunSuite with SparkFixture {
     // exact, not merely lower: a leaked intermediate frame stays pinned
     val leaked = pinnedIds -- before
     assert(leaked.isEmpty, s"release must return every frame the build pinned; left $leaked")
+  }
+
+  test("every memo family's consumer releases its memo frames and reruns identically") {
+    import graft.engine.Memos
+    val s = spark.newSession() // fresh memo keys: every family builds cold here
+    // q409 first: the forest build runs q45, whose exact-pairs memo is then
+    // built inside the forest's own build
+    val queries = graft.tools.MemoCold.families.map(_._2).distinct
+      .sortBy(q => if (q == "q409_boruvka_msf") 0 else 1)
+    assert(queries.head == "q409_boruvka_msf" && queries.contains("q45_neardup_jaccard"))
+    val before = queries.map(q => q -> SparkEntry.queries(q)(s, sf).collect().toSeq).toMap
+
+    val held = Memos.held(s)
+    val missing = graft.tools.MemoCold.families.map(f => (sf, f._1)).toSet -- held.keySet
+    assert(missing.isEmpty, s"each representative must build its registry key; missing $missing")
+    val ids = held.values.flatMap(Memos.framesIn).flatMap(Memos.rddOf).map(_.id).toSet
+    assert(ids.nonEmpty && ids.subsetOf(pinnedIds))
+
+    Memos.release(s)
+    assert(Memos.held(s).isEmpty)
+    val left = ids & pinnedIds
+    assert(left.isEmpty, s"release must unpersist every memo frame; left $left")
+    for (q <- queries)
+      assert(SparkEntry.queries(q)(s, sf).collect().toSeq == before(q), s"$q rerun after release")
+    Memos.release(s)
   }
 
   test("memoized frames store at the serialized memo level") {

@@ -139,7 +139,6 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
   // bounded below the broadcast — the E3 scalar/census/probe-broadcast
   // pattern — because that build side can never grow with the data. A BNLJ
   // whose build side walks down to a raw scan is a genuine pair blowup.
-  // graft.tools.BnljAudit prints the same classification for ad-hoc triage.
   test("audited queries plan no cartesian product and no unbounded broadcast nested loop") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.catalyst.plans.physical.BroadcastDistribution
