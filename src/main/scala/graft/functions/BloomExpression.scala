@@ -3,10 +3,10 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Codegen'd Bloom-filter membership probe over a LONG key column
@@ -62,20 +62,9 @@ object BloomExpression {
       fpp: Double = 0.01): Array[Byte] =
     serialize(df.stat.bloomFilter(keyCol, math.max(expected, 1L), fpp))
 
-  /** Register `graft_bloom_contains(filterBytes, key)` (idempotent). The
-    * first argument must be a foldable binary literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => exprs.head match {
-        case Literal(b: Array[Byte], BinaryType) =>
-          BloomMightContainLong(b, exprs(1))
-        case other => throw new IllegalArgumentException(
-          s"graft_bloom_contains expects a binary literal filter, got $other")
-      },
-      "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  /** `graft_bloom_contains(bytes, key)` as a Column (requires [[register]]). */
+  /** `graft_bloom_contains(bytes, key)` as a Column. */
   def bloomContains(bytes: Array[Byte], key: Column): Column =
-    call_function("graft_bloom_contains", lit(bytes), key)
+    SqlFunctions("graft_bloom_contains", lit(bytes), key)
 }

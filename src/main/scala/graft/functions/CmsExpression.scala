@@ -2,11 +2,11 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -51,20 +51,7 @@ case class CmsEstimateString(bytes: Array[Byte], child: Expression)
 
 object CmsExpression {
 
-  /** Register `graft_cms_estimate(sketchBytes, value)` (idempotent). The
-    * first argument must be a foldable binary literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cms_estimate",
-      exprs => exprs.head match {
-        case Literal(b: Array[Byte], BinaryType) =>
-          CmsEstimateString(b, exprs(1))
-        case other => throw new IllegalArgumentException(
-          s"graft_cms_estimate expects a binary literal sketch, got $other")
-      },
-      "built-in")
-
-  /** `graft_cms_estimate(bytes, value)` as a Column (requires [[register]]). */
+  /** `graft_cms_estimate(bytes, value)` as a Column. */
   def cmsEstimate(bytes: Array[Byte], value: Column): Column =
-    call_function("graft_cms_estimate", lit(bytes), value)
+    SqlFunctions("graft_cms_estimate", lit(bytes), value)
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,13 +117,7 @@ object DamerauLevenshtein {
     d((m + 1) * w + n + 1).toLong
   }
 
-  /** Register `graft_damerau(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_damerau",
-      exprs => DamerauLevenshtein(exprs(0), exprs(1)),
-      "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  def damerau(a: Column, b: Column): Column =
-    call_function("graft_damerau", a, b)
+  def damerau(a: Column, b: Column): Column = SqlFunctions("graft_damerau", a, b)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Dynamic-time-warping distance over two `array<bigint>` series with a
@@ -75,13 +74,6 @@ object DtwDistance {
     prev(n)
   }
 
-  /** Register `graft_dtw(a, b, w)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dtw",
-      exprs => DtwDistance(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-
   def dtwDistance(a: Column, b: Column, w: Column): Column =
-    call_function("graft_dtw", a, b, w)
+    SqlFunctions("graft_dtw", a, b, w)
 }

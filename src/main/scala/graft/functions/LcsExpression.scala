@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -80,13 +79,7 @@ object LcsLength {
     prev(iLen).toLong
   }
 
-  /** Register `graft_lcs(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lcs",
-      exprs => LcsLength(exprs(0), exprs(1)),
-      "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  def lcsLength(a: Column, b: Column): Column =
-    call_function("graft_lcs", a, b)
+  def lcsLength(a: Column, b: Column): Column = SqlFunctions("graft_lcs", a, b)
 }

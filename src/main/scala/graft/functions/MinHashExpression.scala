@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native codegen'd 16-permutation MinHash over an `array<string>` token
@@ -110,14 +109,10 @@ object MinHashExpression {
   /** Number of permutations (16 = 4 bands × 4 rows in q372's banding). */
   val K = 16
 
-  /** Register `graft_minhash64` in the session's FunctionRegistry
-    * (idempotent) so both the Column API and `spark.sql` can call it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash64", exprs => MinHash64(exprs.head), "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  /** `graft_minhash64(tokens)` as a Column (requires [[register]]). */
-  def minhash64(tokens: Column): Column = call_function("graft_minhash64", tokens)
+  /** `graft_minhash64(tokens)` as a Column. */
+  def minhash64(tokens: Column): Column = SqlFunctions("graft_minhash64", tokens)
 
   /** Independent Scala reference (the MinHashSpec bit-equality twin). */
   def reference(tokens: Seq[String]): Array[Long] = {

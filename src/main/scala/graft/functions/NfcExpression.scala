@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,11 +57,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcExpression {
 
-  /** Register `graft_nfc` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
-
-  /** `graft_nfc(str)` as a Column (requires [[register]]). */
-  def nfc(str: Column): Column = call_function("graft_nfc", str)
+  /** `graft_nfc(str)` as a Column. */
+  def nfc(str: Column): Column = SqlFunctions("graft_nfc", str)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -79,12 +78,6 @@ object ShingleExpression {
   private val ByteOrder: java.util.Comparator[AnyRef] =
     (a: AnyRef, b: AnyRef) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String])
 
-  /** Register `graft_shingle_set` in the session's FunctionRegistry
-    * (idempotent) so both the Column API and `spark.sql` can call it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_set", exprs => ShingleSet3(exprs.head), "built-in")
-
-  /** `graft_shingle_set(text)` as a Column (requires [[register]]). */
-  def shingleSet(text: Column): Column = call_function("graft_shingle_set", text)
+  /** `graft_shingle_set(text)` as a Column. */
+  def shingleSet(text: Column): Column = SqlFunctions("graft_shingle_set", text)
 }

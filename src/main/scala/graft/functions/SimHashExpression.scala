@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native codegen'd 64-bit SimHash over an `array<string>` token column
@@ -195,20 +194,11 @@ object SimHashExpression {
     acc >>> 4
   }
 
-  /** Register `graft_simhash64` + `graft_simhash60_md5` in the session's
-    * FunctionRegistry (idempotent) so both the Column API and `spark.sql`
-    * can call them. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash60_md5", exprs => SimHash60Md5(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  /** `graft_simhash64(tokens)` as a Column (requires [[register]]). */
-  def simhash64(tokens: Column): Column = call_function("graft_simhash64", tokens)
+  /** `graft_simhash64(tokens)` as a Column. */
+  def simhash64(tokens: Column): Column = SqlFunctions("graft_simhash64", tokens)
 
-  /** `graft_simhash60_md5(tokens)` as a Column (requires [[register]]). */
-  def simhash60md5(tokens: Column): Column =
-    call_function("graft_simhash60_md5", tokens)
+  /** `graft_simhash60_md5(tokens)` as a Column. */
+  def simhash60md5(tokens: Column): Column = SqlFunctions("graft_simhash60_md5", tokens)
 }

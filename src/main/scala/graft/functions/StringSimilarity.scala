@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -89,13 +88,8 @@ object JaroWinkler {
     } else j
   }
 
-  /** Register `graft_jaro_winkler(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)),
-      "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
   def jaroWinkler(a: Column, b: Column): Column =
-    call_function("graft_jaro_winkler", a, b)
+    SqlFunctions("graft_jaro_winkler", a, b)
 }

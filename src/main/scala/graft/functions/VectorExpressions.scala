@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd dot product over `array<float>` columns — the similarity
@@ -67,12 +66,8 @@ case class DotProductDouble(left: Expression, right: Expression)
 
 object VectorExpressions {
 
-  /** Register `graft_dot` in the session's FunctionRegistry (idempotent) so
-    * both the Column API (via [[graftDot]]) and `spark.sql` can call it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductDouble(exprs(0), exprs(1)), "built-in")
+  def register(spark: SparkSession): Unit = SqlFunctions.register(spark)
 
-  /** `graft_dot(a, b)` as a Column (requires [[register]] on the session). */
-  def graftDot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** `graft_dot(a, b)` as a Column. */
+  def graftDot(a: Column, b: Column): Column = SqlFunctions("graft_dot", a, b)
 }

@@ -444,8 +444,6 @@ object Dedup {
   private[graft] def shingleSigsOf(docs: org.apache.spark.sql.DataFrame,
       pin: Boolean): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.MinHashExpression.register(spark)
-    ShingleExpression.register(spark)
     // a separate select keeps tk one projection the kernel reads, instead of
     // an inlined expression evaluated once per reference
     def withSig(sets: org.apache.spark.sql.DataFrame) =
@@ -651,7 +649,6 @@ object Dedup {
     * (safe for multi-consumer recomputation). */
   private[llm] def simhashes(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.SimHashExpression.register(spark)
     Tables.documents(spark, dir)
       .select($"doc_id",
         graft.functions.SimHashExpression.simhash64(split($"text", " ")).as("simhash"))
@@ -805,7 +802,6 @@ object Dedup {
     * path is driver-verified; q47 keeps the production-rate xxh64 kernel. */
   private[llm] def simhashes60(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     import spark.implicits._
-    graft.functions.SimHashExpression.register(spark)
     // Memoized + repartitioned (r10 verdict item 7): the md5-per-token
     // kernel is the expensive part, and q105/q108/q493 each referenced the
     // signature frame 4–7 times in their DAGs (banded/probed/hot/cold
@@ -2115,7 +2111,6 @@ object Dedup {
       |LIMIT 100""") {
     (spark, dir) =>
     import spark.implicits._
-    graft.functions.LcsLength.register(spark)
     val docs = Tables.documents(spark, dir)
     val sh = corpusCappedShingles(spark, dir)
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))

@@ -518,7 +518,6 @@ object FuzzyJoin {
       |WHERE jw >= 0.98
       |ORDER BY name_a, name_b""") { (spark, dir) =>
     import spark.implicits._
-    graft.functions.JaroWinkler.register(spark)
     val vocab = nameVocab(spark, dir)
     val a = vocab.select($"c_name".as("name_a"),
       substring($"c_name", 1, 1).as("blk"), length($"c_name").as("la"))
@@ -636,7 +635,6 @@ object FuzzyJoin {
       spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     graft.engine.Memos.memo(spark, dir, "partPairDl") {
       import spark.implicits._
-      graft.functions.DamerauLevenshtein.register(spark)
       val v = Tables.part(spark, dir).select($"p_partkey".as("id"),
         $"p_name".as("nm"), $"p_brand".as("brand"), ($"p_size" % 5).as("band"))
       val a = v.select($"id".as("ida"), $"nm".as("nma"), $"brand", $"band")
@@ -785,7 +783,6 @@ object FuzzyJoin {
       |ORDER BY ida, idb""") { (spark, dir) =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.DamerauLevenshtein.register(spark)
     val v = Tables.part(spark, dir).select($"p_partkey".as("id"), $"p_name".as("nm"))
     val ranked = graft.operators.TwoPhase.rowNumber(v, $"nm", Seq($"id"), "rn")
       .select($"id", $"nm", $"rn")

@@ -41,7 +41,6 @@ object Similarity {
 
   private def normed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     Tables.embeddings(spark, dir)
       .select($"vec_id", $"embedding", l2norm($"embedding").as("nrm"))
   }
@@ -667,7 +666,6 @@ object Similarity {
       |FROM p
       |ORDER BY vec_id, k""") { (spark, dir) =>
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     import graft.functions.VectorExpressions.graftDot
     val planes: Seq[org.apache.spark.sql.Column] = (1 to 16).map { k =>
       val signs = (1 to 64).map(d => if ((d * 31 + k * 17) % 2 == 0) 1.0f else -1.0f)
@@ -885,7 +883,6 @@ object Similarity {
       |FROM s JOIN db ON s.label = db.label
       |ORDER BY s.label""") { (spark, dir) =>
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val el = emb
       .select($"label", posexplode($"embedding"))
@@ -1569,7 +1566,6 @@ object Similarity {
       |ORDER BY query_id""") { (spark, dir) =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.register(spark)
     val n = Tables.embeddings(spark, dir).select($"vec_id", $"label", $"embedding")
       .withColumn("nrm", l2norm($"embedding"))
     val q = n.select($"vec_id".as("query_id"), $"label".as("plabel"),

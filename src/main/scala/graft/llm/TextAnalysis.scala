@@ -633,7 +633,6 @@ object TextAnalysis {
       |ORDER BY n DESC, tok""") { (spark, dir) =>
     import spark.implicits._
     import graft.functions.CmsExpression
-    CmsExpression.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(explode(split($"text", " ")).as("tok"))
     val skBytes = toks
@@ -994,7 +993,6 @@ object TextAnalysis {
       |FROM r
       |ORDER BY doc_id""") { (spark, dir) =>
     import spark.implicits._
-    graft.functions.NfcExpression.register(spark)
     val raw = concat(lit("cafe"), ($"doc_id" % 10).cast("string"),
       when($"doc_id" % 2 === 0, lit("é")).otherwise(lit("é")))
     Tables.documents(spark, dir)

@@ -174,7 +174,6 @@ object MlExtras {
     import org.apache.spark.ml.feature.Word2Vec
     import org.apache.spark.ml.functions.vector_to_array
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.register(spark)
     val dot = graft.functions.VectorExpressions.graftDot _
     val toks = Tables.documents(spark, dir)
       .select($"doc_id", split(lower($"text"), " ").as("tokens"))
@@ -183,8 +182,9 @@ object MlExtras {
       .setVectorSize(32).setMinCount(5).setMaxIter(1)
       .setSeed(42).setNumPartitions(1)
       .fit(toks)
-    // getVectors builds its frame on the default session, where graft_dot
-    // may be unregistered: rebind its driver-side rows to this session
+    // getVectors builds its frame on the default session: rebind its
+    // driver-side rows to this session, so the caller's session conf
+    // analyzes and plans every frame of the query
     val vectors = model.getVectors
     val vecs = spark.createDataFrame(vectors.collectAsList(), vectors.schema)
       .select($"word", vector_to_array($"vector").as("v"))

@@ -3400,7 +3400,6 @@ object Eda {
     (spark, dir) =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.DtwDistance.register(spark)
     val daily = Tables.orders(spark, dir)
       .groupBy($"o_orderpriority".as("pri"), $"o_orderdate".as("d"))
       .agg(sum(floor($"o_totalprice" * 100 + 0.5).cast("long")).cast("long").as("cents"))

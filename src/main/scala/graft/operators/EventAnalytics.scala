@@ -1185,7 +1185,6 @@ object EventAnalytics {
       |LIMIT 20""") { (spark, dir) =>
     import spark.implicits._
     import graft.functions.CmsExpression
-    CmsExpression.register(spark)
     val pivot = lit("2024-01-16").cast("timestamp")
     val ev = Tables.events(spark, dir)
     val skBytes = ev.filter($"ts" < pivot)

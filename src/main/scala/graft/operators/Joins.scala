@@ -307,7 +307,6 @@ object Joins {
       |ORDER BY l_returnflag""") { (spark, dir) =>
     import spark.implicits._
     import graft.functions.BloomExpression
-    BloomExpression.register(spark)
     val urgent = Tables.orders(spark, dir)
       .filter($"o_orderpriority" === "1-URGENT")
       .select($"o_orderkey")

@@ -1,12 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-import graft.functions.DotProductDouble
+import graft.functions.{DotProductDouble, SqlFunctions}
 
 /** SURVEY.md §2.11/§4 — a Catalyst optimizer rule that rewrites the
   * declarative higher-order-function dot product
@@ -21,7 +22,8 @@ import graft.functions.DotProductDouble
   * to double before multiplying and fold strictly left-to-right.
   *
   * Activation: `spark.experimental.extraOptimizations` (runtime, used by the
-  * specs) or [[GraftExtensions]] via `spark.sql.extensions` (cluster deploy). */
+  * specs) or [[GraftExtensions]] via `spark.sql.extensions` (cluster deploy).
+  * The Column API needs neither: `graftDot` builds the kernel directly. */
 object RewriteHofDotProduct extends Rule[LogicalPlan] {
 
   private def asDoubleCastOf(e: Expression, v: NamedLambdaVariable): Boolean = e match {
@@ -60,15 +62,16 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Deployment entry point: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  * installs the optimizer rule and the `graft_dot` SQL function on every
-  * session of the cluster. */
+  * installs the two optimizer rules and every [[SqlFunctions]] name on every
+  * session of the cluster. The names serve SQL text only; the Column helpers
+  * build their kernels directly and need no extension. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectOptimizerRule(_ => RewriteHofDotProduct)
     extensions.injectOptimizerRule(_ => RewriteApproxDistinct)
-    extensions.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductDouble].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductDouble(exprs(0), exprs(1))))
+    SqlFunctions.table.foreach { case (name, build) =>
+      extensions.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(SqlFunctions.getClass.getName, name), build))
+    }
   }
 }

@@ -13,7 +13,6 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("bloom probe never false-negatives and prunes most non-members") {
     import spark.implicits._
-    BloomExpression.register(spark)
     val members = spark.range(0, 1000).select(($"id" * 7919L).as("k"))
     val bytes = BloomExpression.buildLongFilter(members, "k", 1000L)
     // every member passes
@@ -30,7 +29,6 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("interpreted eval matches codegen result") {
     import spark.implicits._
-    BloomExpression.register(spark)
     val members = spark.range(0, 100).select($"id".as("k"))
     val bytes = BloomExpression.buildLongFilter(members, "k", 100L)
     val probes = spark.range(0, 200).select($"id".as("k"))
@@ -51,7 +49,6 @@ class BloomSpec extends AnyFunSuite with SparkFixture {
 
   test("bloom prune + exact semi join equals plain semi join (q165 law)") {
     import spark.implicits._
-    BloomExpression.register(spark)
     val orders = graft.sources.Tables.orders(spark, sf)
       .filter($"o_orderpriority" === "1-URGENT").select($"o_orderkey")
     val bytes = BloomExpression.buildLongFilter(orders, "o_orderkey",

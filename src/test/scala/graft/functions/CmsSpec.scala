@@ -25,7 +25,6 @@ class CmsSpec extends AnyFunSuite with SparkFixture {
 
   test("cms estimate never under-counts any token (one-sided error)") {
     import spark.implicits._
-    CmsExpression.register(spark)
     val toks = tokens
     val bytes = sketchOf(toks)
     val under = toks.groupBy($"tok").agg(count(lit(1)).as("exact"))
@@ -39,7 +38,6 @@ class CmsSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.unsafe.types.UTF8String
-    CmsExpression.register(spark)
     val toks = tokens
     val bytes = sketchOf(toks)
     val probes = toks.distinct().limit(50)
@@ -56,7 +54,6 @@ class CmsSpec extends AnyFunSuite with SparkFixture {
 
   test("sketch pre-filter + exact re-count equals plain census (q286 law)") {
     import spark.implicits._
-    CmsExpression.register(spark)
     val toks = tokens
     val bytes = sketchOf(toks)
     val thr = math.floor(toks.count() / 1000.0).toLong

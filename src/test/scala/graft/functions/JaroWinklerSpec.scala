@@ -36,7 +36,6 @@ class JaroWinklerSpec extends AnyFunSuite with SparkFixture {
 
   test("interpreted eval matches codegen result") {
     import spark.implicits._
-    JaroWinkler.register(spark)
     val pairs = graft.sources.Tables.customer(spark, sf)
       .select($"c_name").distinct().orderBy($"c_name").limit(40)
     val crossed = pairs.toDF("a").crossJoin(pairs.toDF("b"))

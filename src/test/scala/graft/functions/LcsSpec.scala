@@ -23,7 +23,6 @@ class LcsSpec extends AnyFunSuite with SparkFixture {
 
   private def run(a: Seq[String], b: Seq[String]): Long = {
     import spark.implicits._
-    LcsLength.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(LcsLength.lcsLength($"a", $"b"))
       .head().getLong(0)
@@ -58,7 +57,6 @@ class LcsSpec extends AnyFunSuite with SparkFixture {
 
   test("codegen result matches direct interpreted kernel call") {
     import spark.implicits._
-    LcsLength.register(spark)
     val docs = graft.sources.Tables.documents(spark, sf)
       .select($"doc_id", split($"text", " ").as("t")).limit(10)
     val crossed = docs.toDF("ia", "a").crossJoin(docs.toDF("ib", "b"))

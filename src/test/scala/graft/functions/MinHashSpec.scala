@@ -11,7 +11,6 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
 
   test("MinHash64 bit-equality: codegen output equals the Scala reference per doc") {
     import spark.implicits._
-    MinHashExpression.register(spark)
     val rows = graft.sources.Tables.documents(spark, sf)
       .select($"doc_id", split($"text", " ").as("t"))
       .withColumn("sig", MinHashExpression.minhash64($"t"))
@@ -27,7 +26,6 @@ class MinHashSpec extends AnyFunSuite with SparkFixture {
 
   test("MinHash64 laws: permutation-invariant, duplicate-insensitive, null for empty") {
     import spark.implicits._
-    MinHashExpression.register(spark)
     val df = Seq(
       (1L, Seq("a", "b", "c")),
       (2L, Seq("c", "a", "b")),          // permutation of 1

@@ -13,7 +13,6 @@ class ShingleSpec extends AnyFunSuite with SparkFixture {
 
   test("ShingleSet3 equals array_sort(array_distinct(3-gram shingles of split(text, ' ')))") {
     import spark.implicits._
-    ShingleExpression.register(spark)
     val edge = Seq("", "a", "a b", "a b c", "a  b c", " a b", "a b ", "  ", "   ",
       "x y x y x y x", "é ü 字 ü é 字", "B a b A a B", "a\tb c d", "z y x w v u")
       .zipWithIndex.map { case (t, i) => (-1L - i, t) }

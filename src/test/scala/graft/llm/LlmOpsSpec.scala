@@ -171,7 +171,6 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
   test("one-pass shingle-set builder equals the explode/cap/regroup chain row for row") {
     import spark.implicits._
     import graft.functions.MinHashExpression
-    MinHashExpression.register(spark)
     type Row3 = (Long, Seq[String], Seq[Long])
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Row3] =
       df.select($"doc_id", $"tk", $"sig").collect()
@@ -341,7 +340,6 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("codegen graft_dot is bit-identical to the HOF dot formulation") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val e = graft.sources.Tables.embeddings(spark, sf)
     val a = e.select($"vec_id".as("ia"), $"embedding".as("ea")).limit(40)
     val b = e.select($"vec_id".as("ib"), $"embedding".as("eb")).limit(40)

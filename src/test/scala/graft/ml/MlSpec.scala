@@ -236,8 +236,8 @@ class MlSpec extends AnyFunSuite with SparkFixture {
   test("q106 Word2Vec synonyms run on a fresh session and match the fixture session") {
     import org.apache.spark.sql.SparkSession
     val fresh = spark.newSession()
-    // the session getOrCreate hands out while q106 runs: one that never
-    // registered graft_dot, so a frame built there cannot resolve it
+    // the session getOrCreate hands out while q106 runs, left untouched: a
+    // frame built there instead of on `fresh` runs under another session
     val bystander = spark.newSession()
     SparkSession.setActiveSession(bystander)
     val got = try MlExtras.q106Word2vecSynonyms.fn(fresh, sf).collect().toSeq

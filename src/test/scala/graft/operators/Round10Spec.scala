@@ -39,7 +39,6 @@ class Round10Spec extends AnyFunSuite with SparkFixture {
 
   test("damerau kernel: codegen column path equals direct Scala eval") {
     import spark.implicits._
-    graft.functions.DamerauLevenshtein.register(spark)
     val rows = graft.sources.Tables.part(spark, sf)
       .select($"p_name".as("a"))
       .crossJoin(graft.sources.Tables.part(spark, sf)
