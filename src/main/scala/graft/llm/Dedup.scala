@@ -164,7 +164,11 @@ object Dedup {
     * CTE (jaccard ≥ 0.8) then yields exactly the engine's verified pair
     * set — INCLUDING any banding miss, which appears identically on both
     * sides (the r9 sf1 sweep caught two xxh64-banding misses at 10× pairs
-    * that the old exact-pair oracles could not mirror). */
+    * that the old exact-pair oracles could not mirror). The engine bands
+    * by slice equality ([[bandCandidates]]), this SQL by an md5 key of
+    * each band's comma-joined hashes; two bands share a key exactly when
+    * their hashes are equal (barring an md5 collision), and LlmOpsSpec
+    * pins that both give the same candidate set. */
   private[llm] val portableCandPairsSql: String =
     """hh AS (SELECT doc_id, CAST(('0x' || substr(md5(s), 1, 14)) AS BIGINT) AS lo,
       |              CAST(('0x' || substr(md5(s), 17, 14)) AS BIGINT) AS hi FROM sh),
@@ -227,26 +231,29 @@ object Dedup {
     * spec-pinned). */
   private[llm] def corpusExactClusters(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    corpusFrame(spark, dir, "exactClusters")(
-      starComponents(
-        Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
-        corpusExactPairs(spark, dir).select(
-          org.apache.spark.sql.functions.col("doc_a"),
-          org.apache.spark.sql.functions.col("doc_b")))._1
-        .toDF("doc_id", "cluster_id"))
+    corpusClusters(spark, dir, "exactClusters")(corpusExactPairs(spark, dir))
 
   /** Memoized corpus-level cluster labels over the PORTABLE verified pair
     * set — the q300/q343/q349/q398 capstone family each re-ran components
     * over the identical (memoized) pair frame. */
   private[llm] def corpusPortableClusters(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    corpusFrame(spark, dir, "portableClusters")(
-      starComponents(
-        Tables.documents(spark, dir).select(org.apache.spark.sql.functions.col("doc_id")),
-        corpusPortablePairs(spark, dir).select(
-          org.apache.spark.sql.functions.col("doc_a"),
-          org.apache.spark.sql.functions.col("doc_b")))._1
-        .toDF("doc_id", "cluster_id"))
+    corpusClusters(spark, dir, "portableClusters")(corpusPortablePairs(spark, dir))
+
+  /** [[graft.engine.Memos.memo]] entry `tag` for [[starComponents]]' labels of the
+    * documents under a (doc_a, doc_b, …) pair frame. The labels read the
+    * last round's checkpointed edges — the only checkpointed frame under
+    * them — which are unpersisted once the labels are stored, so the memo
+    * is the one frame the build leaves pinned. */
+  private def corpusClusters(spark: org.apache.spark.sql.SparkSession, dir: String,
+      tag: String)(pairs: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.engine.Memos.memo(spark, dir, tag) {
+      val labels = starComponents(Tables.documents(spark, dir).select(col("doc_id")),
+        pairs.select(col("doc_a"), col("doc_b")))._1.toDF("doc_id", "cluster_id")
+      val stored = graft.engine.Memos.checkpoint(labels)
+      graft.engine.Memos.unpersistFrame(labels)
+      stored
+    }
 
   /** Memoized corpus-level (doc_id, tk, sig) — [[shingleSigsOf]] over the
     * documents table, materialized once per (session, dir). The one memo
@@ -303,7 +310,7 @@ object Dedup {
     * (hash-seed-specific); ScalaTest checks it recovers q45's exact pairs. */
   /** q46's core over any (doc_id, text, …) frame: MinHash+LSH banded
     * candidate pairs at jaccardDist ≤ 0.3 — the sub-quadratic near-dup
-    * path. Shared by q46 and the q349 LSH-path curation capstone. Recall
+    * path, q46's pair stage (q349 rides the portable stage since r9). Recall
     * law (LlmOpsSpec): every exact-jaccard ≥ 0.8 pair from
     * [[neardupPairs]] is recovered (0.8 similarity = 0.2 distance, well
     * inside the 0.3 cut; 5 hash tables OR-amplify recall at that radius). */
@@ -325,11 +332,11 @@ object Dedup {
       .fit(featurized)
     // RELATIONAL TWIN of approxSimilarityJoin over the SAME fitted model
     // (r11: output diffed byte-identical vs the MLlib join at 3 SFs — q46
-    // and the q349 capstone both ride it): MLlib transformed the frame per
-    // join side, shuffled a global distinct over candidates, then ran its
-    // non-codegen keyDistance per pair. The twin transforms ONCE
-    // (checkpointed), dedups candidates with q372's first-matching-band
-    // projection, and computes the IDENTICAL jaccard distance with codegen
+    // rides it): MLlib transformed the frame per join side, shuffled a
+    // global distinct over candidates, then ran its non-codegen
+    // keyDistance per pair. The twin transforms ONCE (checkpointed),
+    // dedups candidates with one distinct (see below), and computes the
+    // IDENTICAL jaccard distance with codegen
     // array ops on the feature indices: keyDistance = 1 − |A∩B|/|A∪B| over
     // toSparse.indices sets, replayed as array_intersect/size with the same
     // double division and the same strict `< 0.3` cut.
@@ -361,50 +368,66 @@ object Dedup {
       .select($"doc_a", $"doc_b", stat($"jaccard_dist").as("jaccard_dist"))
   }
 
-  /** SKETCH-THEN-VERIFY near-dup pairs — the 100 TB DEFAULT the capstones
-    * (q300/q343/q398) ride: q372's codegen'd 4×4 banded MinHash candidates
-    * (sub-quadratic — candidates only equi-join on (band, 4-hash bucket),
-    * never shingle×shingle; far more selective than MLlib's OR-amplified
-    * 5×1 banding, which floods candidates at P = 1−(1−j)⁵) exact-Jaccard-
-    * VERIFIED on q45's capped shingle space, so the output is
-    * `neardupPairs ∩ candidates`. Because the banding recall law holds
-    * (MinHashSpec gates recall = 1 vs q45 on this corpus; LlmOpsSpec pins
-    * lshVerified ≡ exact — true near-dups here sit at j ≈ 0.9–1.0 where
-    * P[all 4 bands miss] = (1−j⁴)⁴ < 10⁻³), the output EQUALS
-    * [[neardupPairs]] on the verified corpora — which is what keeps the
-    * capstones' DuckDB oracles exact while their pair stage runs the
-    * sub-quadratic plan. The verify cost is candidate-pair-scale: each
-    * candidate compares its two capped shingle arrays. Sets and signatures
-    * come from one unpinned [[shingleSigsOf]] plan, so a call leaves no
-    * frame in block-manager storage behind it. */
-  private[llm] def neardupPairsLshVerified(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sets = shingleSigsOf(docs, pin = false)
-    val tk = sets.select($"doc_id", $"tk")
-    val sig = sets.select($"doc_id", $"sig")
-    val bands = sig
-      .withColumn("b", explode(sequence(lit(0), lit(3))))
-      .withColumn("bv", slice($"sig", $"b" * 4 + 1, lit(4)))
-    val cand = bands.toDF("doc_a", "sig_a", "b", "bv")
-      .join(bands.toDF("doc_b", "sig_b", "b", "bv"), Seq("b", "bv"))
-      .filter($"doc_a" < $"doc_b")
-    // q105's first-matching-band dedup — a pure projection, no global
-    // distinct shuffle
-    val firstBand = (3 to 0 by -1).foldLeft(lit(4)) { (acc, i) =>
-      when(slice($"sig_a", i * 4 + 1, 4) === slice($"sig_b", i * 4 + 1, 4), lit(i))
+  /** The banded-LSH candidate stage over two (id, sig: array<long>[16])
+    * frames: each signature splits into 16 / rowsPerBand bands of
+    * rowsPerBand hashes, and a (doc_a, doc_b) pair is a candidate when
+    * some band's slices are equal. Each pair is kept on its FIRST
+    * matching band only — a projection on the two signatures, so the
+    * dedup costs no shuffle. Signatures come from either family: the
+    * xxh64 kernel ([[minhashSigs]]) or the md5 portable one
+    * ([[portableSigArrays]]); the DuckDB oracles band the portable family
+    * by md5 keys of the same slices, and LlmOpsSpec pins that both give
+    * the same candidate set. Passing one frame as both sides self-joins
+    * it: each unordered pair is kept once, as doc_a < doc_b.
+    *
+    * 100 TB plan: a bounded explode, then an equi-join on (band, slice) —
+    * candidates meet only inside equal-bucket groups. */
+  private[llm] def bandCandidates(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame, rowsPerBand: Int): org.apache.spark.sql.DataFrame = {
+    val (r, nb) = (rowsPerBand, 16 / rowsPerBand)
+    def bands(sig: org.apache.spark.sql.DataFrame, id: String, s: String) = sig
+      .withColumn("b", explode(sequence(lit(0), lit(nb - 1))))
+      .withColumn("bv", slice(col(sig.columns(1)), col("b") * r + 1, lit(r)))
+      .toDF(id, s, "b", "bv")
+    val firstBand = (nb - 1 to 0 by -1).foldLeft(lit(nb)) { (acc, i) =>
+      when(slice(col("sig_a"), i * r + 1, r) === slice(col("sig_b"), i * r + 1, r), lit(i))
         .otherwise(acc)
     }
-    val uniq = cand.filter($"b" === firstBand).select($"doc_a", $"doc_b")
-    uniq
+    val cand = bands(a, "doc_a", "sig_a").join(bands(b, "doc_b", "sig_b"), Seq("b", "bv"))
+    // a self-join meets each pair in both orders and each document itself
+    (if (a eq b) cand.filter(col("doc_a") < col("doc_b")) else cand)
+      .filter(col("b") === firstBand)
+      .select(col("doc_a"), col("doc_b"))
+  }
+
+  /** The exact-Jaccard verify of a (doc_a, doc_b) candidate frame against
+    * (doc_id, tk) capped shingle sets: (doc_a, doc_b, shared, jaccard)
+    * with jaccard = shared / (|tk_a| + |tk_b| − shared) ≥ 0.8 — the same
+    * double as |∩| / |∪|. Cost is candidate-pair-scale: each candidate
+    * intersects its two sorted arrays. */
+  private[llm] def verifyJaccard(cand: org.apache.spark.sql.DataFrame,
+      tk: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val shared = size(array_intersect(col("tk_a"), col("tk_b"))).cast("long")
+    val jaccard = shared / (size(col("tk_a")) + size(col("tk_b")) - shared)
+    cand
       .join(tk.toDF("doc_a", "tk_a"), Seq("doc_a"))
       .join(tk.toDF("doc_b", "tk_b"), Seq("doc_b"))
-      .withColumn("shared", size(array_intersect($"tk_a", $"tk_b")).cast("long"))
-      .withColumn("jac",
-        $"shared" / (size($"tk_a") + size($"tk_b") - $"shared"))
-      .filter($"jac" >= 0.8)
-      .select($"doc_a", $"doc_b", $"shared", stat($"jac").as("jaccard"))
+      .filter(jaccard >= 0.8)
+      .select(col("doc_a"), col("doc_b"), shared.as("shared"), jaccard.as("jaccard"))
+  }
+
+  /** The co-shingle census over a (doc_id, s) shingle stream: one row per
+    * pair sharing at least one shingle, with columns doc_a < doc_b,
+    * shared, the `extra` aggregates over the pair's shared (doc_a, doc_b,
+    * s) rows, and the two set sizes na and nb. Callers select by name. */
+  private[llm] def coShinglePairs(sh: org.apache.spark.sql.DataFrame,
+      extra: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    sh.toDF("doc_a", "s").join(sh.toDF("doc_b", "s"), Seq("s"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("shared"), extra: _*)
+      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
+      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
   }
 
   val q46NeardupMinhashLsh: GraftQuery = GraftQuery.rowsOnly(
@@ -570,9 +593,10 @@ object Dedup {
     * recall at j = 0.8 with 4 bands, and 1.0 empirically at the driver
     * tiers, gated by MinHashSpec against q45's exact pairs); candidates
     * are verified with EXACT shingle-set Jaccard ≥ 0.8 (q45's space), so
-    * false positives cannot survive. Pair dedup is q105's first-matching-
-    * band filter (computed from the two signatures alone — no global
-    * distinct shuffle).
+    * false positives cannot survive. Banding, the first-matching-band pair
+    * dedup (computed from the two signatures alone — no global distinct
+    * shuffle) and the verify are the shared stage: [[bandCandidates]] by
+    * slice equality, then [[verifyJaccard]].
     *
     * TIER SCOPE of the strict oracle (r9 sf1 sweep finding): the oracle
     * states q45's exact pair set under the empirical recall-1 law, which
@@ -593,9 +617,9 @@ object Dedup {
     "q372_minhash_banded",
     // STRICT oracle since r6: candidates are exact-verified on q45's capped
     // shingle space and the banding recall law holds (MinHashSpec gates
-    // recall = 1 vs q45; LlmOpsSpec pins the verified-pair identity), so
-    // the output IS q45's pair set — the oracle is q45's SQL minus the
-    // `shared` column. The driver now checks the whole banded path.
+    // recall = 1 vs q45 and no pair below 0.8), so the output IS q45's
+    // pair set — the oracle is q45's SQL minus the `shared` column, so the
+    // strict oracle check covers the whole banded path.
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE len(string_split(text, ' ')) >= 3),
       |sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS s
       |        FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t)-2)) AS i)),
@@ -614,31 +638,10 @@ object Dedup {
       |ORDER BY doc_a, doc_b""") {
     (spark, dir) =>
       import spark.implicits._
-      // minhashSigs is memoized + checkpointed per (session, dir) — the
-      // band self-join's two sides read the same materialized blocks
+      // minhashSigs and cappedShingleSets are projections of one memo, so
+      // the band self-join's two sides read the same materialized blocks
       val sig = minhashSigs(spark, dir)
-      val bands = sig
-        .withColumn("b", explode(sequence(lit(0), lit(3))))
-        .withColumn("bv", slice($"sig", $"b" * 4 + 1, lit(4)))
-      val cand = bands.toDF("doc_a", "sig_a", "b", "bv")
-        .join(bands.toDF("doc_b", "sig_b", "b", "bv"), Seq("b", "bv"))
-        .filter($"doc_a" < $"doc_b")
-      // keep a pair only on the FIRST band where its signatures agree —
-      // q105's no-global-distinct dedup, a pure projection on (sig_a, sig_b)
-      val firstBand = (3 to 0 by -1).foldLeft(lit(4)) { (acc, i) =>
-        when(slice($"sig_a", i * 4 + 1, 4) === slice($"sig_b", i * 4 + 1, 4), lit(i))
-          .otherwise(acc)
-      }
-      val uniq = cand.filter($"b" === firstBand)
-        .select($"doc_a", $"doc_b")
-      val tk = cappedShingleSets(spark, dir) // memoized + checkpointed
-      uniq
-        .join(tk.toDF("doc_a", "tk_a"), Seq("doc_a"))
-        .join(tk.toDF("doc_b", "tk_b"), Seq("doc_b"))
-        .withColumn("jaccard",
-          size(array_intersect($"tk_a", $"tk_b")).cast("double")
-            / size(array_union($"tk_a", $"tk_b")))
-        .filter($"jaccard" >= 0.8)
+      verifyJaccard(bandCandidates(sig, sig, 4), cappedShingleSets(spark, dir))
         .select($"doc_a", $"doc_b", round($"jaccard", 4).as("jaccard"))
         .orderBy($"doc_a", $"doc_b")
   }
@@ -992,6 +995,7 @@ object Dedup {
       val nNext = next.count()
       // set equality = equal counts + empty difference (both driver scalars)
       converged = nNext == nEdges && next.exceptAll(edges).isEmpty
+      graft.engine.Memos.unpersistFrame(edges) // next no longer reads it
       edges = next
       nEdges = nNext
       iter += 1
@@ -1781,28 +1785,10 @@ object Dedup {
     import spark.implicits._
     val isDelta = $"doc_id" % 10 === 7
     val sig = minhashSigs(spark, dir) // memoized + checkpointed
-    val bands = sig
-      .withColumn("b", explode(sequence(lit(0), lit(3))))
-      .withColumn("bv", slice($"sig", $"b" * 4 + 1, lit(4)))
-      .select($"doc_id", $"b", $"bv", $"sig")
-    val deltaBands = bands.filter(isDelta).toDF("delta_id", "b", "bv", "sig_a")
-    val corpusBands = bands.filter(!isDelta).toDF("corpus_id", "b", "bv", "sig_b")
-    val cand = deltaBands.join(corpusBands, Seq("b", "bv"))
-    // first-matching-band dedup (q372's projection-only pair dedup)
-    val firstBand = (3 to 0 by -1).foldLeft(lit(4)) { (acc, i) =>
-      when(slice($"sig_a", i * 4 + 1, 4) === slice($"sig_b", i * 4 + 1, 4), lit(i))
-        .otherwise(acc)
-    }
-    val uniq = cand.filter($"b" === firstBand).select($"delta_id", $"corpus_id")
-    val tk = cappedShingleSets(spark, dir) // memoized + checkpointed
-    uniq
-      .join(tk.toDF("delta_id", "tk_a"), Seq("delta_id"))
-      .join(tk.toDF("corpus_id", "tk_b"), Seq("corpus_id"))
-      .withColumn("jaccard",
-        size(array_intersect($"tk_a", $"tk_b")).cast("double")
-          / size(array_union($"tk_a", $"tk_b")))
-      .filter($"jaccard" >= 0.8)
-      .select($"delta_id", $"corpus_id", round($"jaccard", 4).as("jaccard"))
+    verifyJaccard(bandCandidates(sig.filter(isDelta), sig.filter(!isDelta), 4),
+      cappedShingleSets(spark, dir))
+      .select($"doc_a".as("delta_id"), $"doc_b".as("corpus_id"),
+        round($"jaccard", 4).as("jaccard"))
   }
 
   /** SPLIT-LEAKAGE MATRIX — the audit q298's cluster-consistent split
@@ -2112,15 +2098,8 @@ object Dedup {
     (spark, dir) =>
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    val sh = corpusCappedShingles(spark, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val cands = sh.toDF("doc_a", "s").join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared"))
-      .filter($"shared" >= 3)
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
-      .filter(lit(5) * $"shared" >= least($"na", $"nb"))
+    val cands = coShinglePairs(corpusCappedShingles(spark, dir))
+      .filter($"shared" >= 3 && lit(5) * $"shared" >= least($"na", $"nb"))
     val toks = docs.select($"doc_id", split($"text", " ").as("toks"))
     cands
       .join(toks.select($"doc_id".as("doc_a"), $"toks".as("toks_a")), Seq("doc_a"))
@@ -2287,45 +2266,36 @@ object Dedup {
         .cast("long").as("minhash"))
   }
 
-  /** PORTABLE-LSH VERIFIED near-dup pairs — [[neardupPairsLshVerified]]
-    * with the xxh64 kernel signatures swapped for [[portableMinhashSigs]]'
-    * md5 double-hashing and q495's 4×4 band keys: banded bucket-join
-    * candidates, exact-Jaccard-verified (≥ 0.8) on q45's capped shingle
-    * sets. Because BOTH the signatures and the band keys are md5-derived,
-    * a DuckDB oracle re-derives the IDENTICAL candidate set — which is
-    * what lets q349's full curation pipeline be strict-oracle'd while its
-    * pair stage stays sub-quadratic (the conversion round 8's verdict
-    * prescribed). Output schema matches [[neardupPairs]] on (doc_a, doc_b).
+  /** [[portableMinhashSigs]]' long (doc_id, i, minhash) rows as one
+    * (doc_id, sig: array<long>[16]) row per document, ordered by i — the
+    * shape [[bandCandidates]] bands. */
+  private[llm] def portableSigArrays(
+      sig: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    sig.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("i"), col("minhash"))))
+        .getField("minhash").as("sig"))
+
+  /** PORTABLE-LSH VERIFIED near-dup pairs — [[portableMinhashSigs]]' md5
+    * double-hashing signatures banded 4×4 by [[bandCandidates]], the
+    * candidates exact-Jaccard-verified (≥ 0.8) on q45's capped shingle
+    * sets. A DuckDB oracle recomputes the signatures and bands them by md5
+    * keys of the same 4-hash runs ([[portableCandPairsSql]]), which gives
+    * the IDENTICAL candidate set — which is what lets q349's full curation
+    * pipeline be strict-oracle'd while its pair stage stays sub-quadratic.
+    * Output (doc_a, doc_b) is the `portablePairs` memo
+    * ([[corpusPortablePairs]]) behind q300/q343/q349/q398.
     *
     * 100 TB plan: q494's signature shape (one md5 per capped shingle, a
-    * bounded 16-way explode, one map-side-combinable min agg), band keys
-    * as census-sized aggs, candidates meet only inside equal-(band, key)
-    * buckets, and the verify stage is candidate-pair-scale array
-    * intersection — never a shingle×shingle or doc×doc join. */
+    * bounded 16-way explode, one map-side-combinable min agg), one
+    * doc-keyed collect into arrays, candidates meet only inside equal-
+    * (band, slice) buckets, and the verify stage is candidate-pair-scale
+    * array intersection — never a shingle×shingle or doc×doc join. */
   private[llm] def neardupPairsPortableLshVerified(
       docs: org.apache.spark.sql.DataFrame,
       sigOpt: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sig = sigOpt.getOrElse(portableMinhashSigs(docs))
-    val band = sig.groupBy($"doc_id", expr("i div 4").as("b"))
-      .agg(expr(
-        "md5(concat_ws(',', transform(sort_array(collect_list(struct(i, minhash))), x -> cast(x.minhash AS string))))")
-        .as("bk"))
-      .localCheckpoint() // both sides of the bucket self-join read it
-    val cand = band.toDF("doc_a", "b", "bk")
-      .join(band.toDF("doc_b", "b", "bk"), Seq("b", "bk"))
-      .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b").distinct()
-    val tk = cappedShingleSetsOf(docs)
-    cand
-      .join(tk.toDF("doc_a", "tk_a"), Seq("doc_a"))
-      .join(tk.toDF("doc_b", "tk_b"), Seq("doc_b"))
-      .withColumn("shared", size(array_intersect($"tk_a", $"tk_b")).cast("long"))
-      .withColumn("jac",
-        $"shared" / (size($"tk_a") + size($"tk_b") - $"shared"))
-      .filter($"jac" >= 0.8)
-      .select($"doc_a", $"doc_b")
+    val sig = portableSigArrays(sigOpt.getOrElse(portableMinhashSigs(docs)))
+    verifyJaccard(bandCandidates(sig, sig, 4), cappedShingleSetsOf(docs))
+      .select(col("doc_a"), col("doc_b"))
   }
 
   /** PORTABLE MinHash SIGNATURES — q371's signature dump with the hash
@@ -2362,10 +2332,14 @@ object Dedup {
     * a pair, BOTH engines name that pair. At sf0.1 this audit shows 256
     * verified + 50 candidate_only (measured), the textbook S-curve.
     *
-    * 100 TB plan: signatures as q494; the band key is an md5 of each
-    * 4-hash run (bounded string), candidates meet only inside equal-key
-    * buckets; the verify stage and the exact side reuse q45's capped pair
-    * machinery — everything pair-set-sized past the banding. */
+    * The engine bands by slice equality ([[bandCandidates]]), the oracle
+    * by an md5 key of each 4-hash run; LlmOpsSpec pins that the two give
+    * the same candidate set.
+    *
+    * 100 TB plan: signatures as q494, collected into one 16-hash array per
+    * document; candidates meet only inside equal-(band, slice) buckets;
+    * the exact side is the [[coShinglePairs]] census over q45's capped
+    * shingles — everything pair-set-sized past the banding. */
   val q495LshCandidateAudit: GraftQuery = GraftQuery.oracled(
     "q495_lsh_candidate_audit",
     portableSigSql +
@@ -2392,24 +2366,10 @@ object Dedup {
         |FROM u WHERE is_cand OR is_exact
         |ORDER BY doc_a, doc_b""".stripMargin) { (spark, dir) =>
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val sig = corpusPortableSigs(spark, dir)
-    val band = sig.groupBy($"doc_id", expr("i div 4").as("b"))
-      .agg(expr(
-        "md5(concat_ws(',', transform(sort_array(collect_list(struct(i, minhash))), x -> cast(x.minhash AS string))))")
-        .as("bk"))
-    val cand = band.toDF("doc_a", "b", "bk")
-      .join(band.toDF("doc_b", "b", "bk"), Seq("b", "bk"))
-      .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b").distinct()
+    val sig = portableSigArrays(corpusPortableSigs(spark, dir))
+    val cand = bandCandidates(sig, sig, 4)
       .withColumn("is_cand", lit(true))
-    val sh = corpusCappedShingles(spark, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val jac = sh.toDF("doc_a", "s").join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared"))
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
+    val jac = coShinglePairs(corpusCappedShingles(spark, dir))
       .select($"doc_a", $"doc_b",
         round($"shared".cast("double") / ($"na" + $"nb" - $"shared"), 4).as("jaccard"),
         ($"shared".cast("double") / ($"na" + $"nb" - $"shared") >= 0.8).as("is_exact"))
@@ -2459,13 +2419,7 @@ object Dedup {
       |FROM h, t ORDER BY bin""") { (spark, dir) =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val sh = corpusCappedShingles(spark, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val h = sh.toDF("doc_a", "s").join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).cast("long").as("shared"))
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
+    val h = coShinglePairs(corpusCappedShingles(spark, dir))
       .select(expr("(20 * shared) div (na + nb - shared)").as("bin"))
       .groupBy($"bin").agg(count(lit(1)).cast("long").as("n_pairs"))
     val t = h.agg(sum($"n_pairs").cast("long").as("total"))
@@ -2522,13 +2476,7 @@ object Dedup {
       .join(sig.toDF("doc_b", "i", "minhash"), Seq("i", "minhash"))
       .filter($"doc_a" < $"doc_b")
       .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).cast("long").as("est16"))
-    val sh = corpusCappedShingles(spark, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val jac = sh.toDF("doc_a", "s").join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).cast("long").as("shared"))
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
+    val jac = coShinglePairs(corpusCappedShingles(spark, dir))
       .select($"doc_a", $"doc_b",
         expr("(1000000 * shared) div (na + nb - shared)").cast("long").as("jppm"))
     jac.join(agr, Seq("doc_a", "doc_b"), "left")
@@ -2983,38 +2931,13 @@ object Dedup {
       |WHERE shared / (sa.n + sb.n - shared) >= 0.8
       |ORDER BY doc_a, doc_b""") { (spark, dir) =>
     import spark.implicits._
-    val sh = corpusCappedShingles(spark, dir)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    sh.toDF("doc_a", "s")
-      .join(sh.toDF("doc_b", "s"), Seq("s"))
-      .filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b")
-      .agg(count(lit(1)).as("shared"), min($"s").as("evidence"))
-      .join(sizes.toDF("doc_a", "na"), Seq("doc_a"))
-      .join(sizes.toDF("doc_b", "nb"), Seq("doc_b"))
+    coShinglePairs(corpusCappedShingles(spark, dir), min($"s").as("evidence"))
       .filter($"shared" / ($"na" + $"nb" - $"shared") >= 0.8)
       .select($"doc_a", $"doc_b", $"shared".cast("long").as("shared"),
         $"na".cast("long").as("n_a"), $"nb".cast("long").as("n_b"),
         round($"shared" / ($"na" + $"nb" - $"shared"), 4).as("jaccard"),
         $"evidence")
       .orderBy($"doc_a", $"doc_b")
-  }
-
-  /** Candidate pairs under a (bands × rowsPerBand) banding of the 16-hash
-    * signature — q372's pairing stage parameterized by scheme. */
-  private[llm] def bandedCandidates(
-      sig: org.apache.spark.sql.DataFrame, bandsN: Int): org.apache.spark.sql.DataFrame = {
-    val spark = sig.sparkSession
-    import spark.implicits._
-    val r = 16 / bandsN
-    val bands = sig
-      .withColumn("b", explode(sequence(lit(0), lit(bandsN - 1))))
-      .withColumn("bv", slice($"sig", $"b" * r + 1, lit(r)))
-      .select($"doc_id", $"b", $"bv")
-    bands.toDF("doc_a", "b", "bv")
-      .join(bands.toDF("doc_b", "b", "bv"), Seq("b", "bv"))
-      .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b").distinct()
   }
 
   /** LSH BANDING-SCHEME SWEEP — the S-curve tuning study behind every
@@ -3029,16 +2952,19 @@ object Dedup {
     * cross-engine even when a band MISSES a true pair — the r8
     * formulation (xxh64 signatures + an oracle stating recall-1) broke at
     * the sf1 tier exactly there (3 missed pairs at 10× pair count =
-    * empirical recall 0.9988, not 1). The 2×8 high-precision scheme stays
+    * empirical recall 0.9988, not 1). The engine bands each scheme by
+    * slice equality ([[bandCandidates]]), the oracle by md5 keys of the
+    * same slices; LlmOpsSpec pins that both give the same candidates at
+    * 2, 4 and 8 rows per band. The 2×8 high-precision scheme stays
     * SPEC-side (LlmOpsSpec: candidates(2×8) ⊆ candidates(4×4) ⊆
     * candidates(8×2) half-band containment, verified ⊆ exact); q372
     * remains the xxh64 codegen-kernel production-rate showcase with q494/
     * q495 as its portable strict twins.
     *
-    * 100 TB plan: one signature projection feeds all schemes; each
-    * scheme is a census-sized band-key agg + bucket equi-join (q372's
-    * shape). The sweep runs on a sample in production — the operating
-    * point it picks is what q372 then runs at corpus scale. */
+    * 100 TB plan: one signature array per document feeds all schemes;
+    * each scheme is a bounded explode + bucket equi-join on (band, slice)
+    * (q372's shape). The sweep runs on a sample in production — the
+    * operating point it picks is what q372 then runs at corpus scale. */
   val q396BandingSweep: GraftQuery = GraftQuery.oracled(
     "q396_banding_sweep",
     portableSigSql +
@@ -3067,27 +2993,10 @@ object Dedup {
         |ORDER BY bands, doc_a, doc_b""".stripMargin) {
     (spark, dir) =>
       import spark.implicits._
-      val sig = corpusPortableSigs(spark, dir)
+      val sig = portableSigArrays(corpusPortableSigs(spark, dir))
       val tk = cappedShingleSets(spark, dir) // memoized + checkpointed
-      def portableCandidates(bn: Int): org.apache.spark.sql.DataFrame = {
-        val r = 16 / bn
-        val band = sig.groupBy($"doc_id", expr(s"i div $r").as("b"))
-          .agg(expr(
-            "md5(concat_ws(',', transform(sort_array(collect_list(struct(i, minhash))), x -> cast(x.minhash AS string))))")
-            .as("bk"))
-        band.toDF("doc_a", "b", "bk")
-          .join(band.toDF("doc_b", "b", "bk"), Seq("b", "bk"))
-          .filter($"doc_a" < $"doc_b")
-          .select($"doc_a", $"doc_b").distinct()
-      }
       Seq(4, 8).map { bn =>
-        portableCandidates(bn)
-          .join(tk.toDF("doc_a", "tk_a"), Seq("doc_a"))
-          .join(tk.toDF("doc_b", "tk_b"), Seq("doc_b"))
-          .withColumn("jaccard",
-            size(array_intersect($"tk_a", $"tk_b")).cast("double")
-              / size(array_union($"tk_a", $"tk_b")))
-          .filter($"jaccard" >= 0.8)
+        verifyJaccard(bandCandidates(sig, sig, 16 / bn), tk)
           .select(lit(bn.toLong).as("bands"), lit((16 / bn).toLong).as("rows_per_band"),
             $"doc_a", $"doc_b", round($"jaccard", 4).as("jaccard"))
       }.reduce(_ unionByName _).orderBy($"bands", $"doc_a", $"doc_b")

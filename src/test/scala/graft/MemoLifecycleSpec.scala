@@ -38,9 +38,10 @@ class MemoLifecycleSpec extends AnyFunSuite with SparkFixture {
     // RDD ids, not just a count: an earlier suite's non-blocking unpersist
     // may drop an old entry mid-test, but nothing else adds one
     def pinnedIds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    val s = spark.newSession() // fresh memo key: q371/q372/q399 build cold here
+    val s = spark.newSession() // fresh memo key: q371/q372/q399/q349 build cold here
     val before = pinnedIds
-    for (q <- Seq("q371_minhash_signatures", "q372_minhash_banded", "q399_neardup_evidence"))
+    for (q <- Seq("q371_minhash_signatures", "q372_minhash_banded", "q399_neardup_evidence",
+        "q349_curation_lsh"))
       SparkEntry.queries(q)(s, sf).collect()
     assert((pinnedIds -- before).nonEmpty, "the MinHash consumers must pin their memo")
 

@@ -469,18 +469,6 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
       5L -> "keep", 6L -> "near_dup", 7L -> "keep", 10L -> "eval_holdout"))
   }
 
-  test("sketch-then-verify pairs equal the exact capped-index pairs (capstone oracle precondition)") {
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val exact = Dedup.neardupPairs(docs).select($"doc_a", $"doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lshv = Dedup.neardupPairsLshVerified(docs).select($"doc_a", $"doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lshv === exact,
-      "LSH-verified pairs must equal the exact pairs — q300/q343/q398's " +
-        "strict oracles ride this identity")
-  }
-
   test("mega-cluster guard: passes small clusters, fails loudly past the cap") {
     import spark.implicits._
     // real labels (tiny clusters) pass through untouched
@@ -531,6 +519,34 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
     assert(port === exact,
       "portable 4×4 banding missed a real pair on this corpus — the " +
         "empirical recall-1 law (j≈0.9–1.0 ⇒ P[all bands miss] < 1e-3) broke")
+  }
+
+  test("slice-equality banding of portable signatures equals the oracle's md5 band-key candidates") {
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val long = Dedup.portableMinhashSigs(docs).localCheckpoint()
+    val sig = Dedup.portableSigArrays(long)
+    assert(sig.count() > 1 && sig.filter(size($"sig") =!= 16).isEmpty)
+    for (rows <- Seq(2, 4, 8)) {
+      // the band keys the DuckDB oracles derive: md5 of each band's
+      // comma-joined hashes, in i order
+      val band = long.groupBy($"doc_id", expr(s"i div $rows").as("b"))
+        .agg(expr(
+          "md5(concat_ws(',', transform(sort_array(collect_list(struct(i, minhash))), x -> cast(x.minhash AS string))))")
+          .as("bk"))
+      val md5Keys = band.toDF("doc_a", "b", "bk")
+        .join(band.toDF("doc_b", "b", "bk"), Seq("b", "bk"))
+        .filter($"doc_a" < $"doc_b")
+        .select($"doc_a", $"doc_b").distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val got = Dedup.bandCandidates(sig, sig, rows).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      assert(md5Keys.nonEmpty)
+      assert(got.length === got.toSet.size, s"rows=$rows: a pair was kept on two bands")
+      assert(got.toSet === md5Keys,
+        s"rows=$rows: slice-only ${(got.toSet -- md5Keys).take(5)}, " +
+          s"md5-only ${(md5Keys -- got.toSet).take(5)}")
+    }
   }
 
   test("q380 hash-collision audit: monotone in bucket count, occupancy bounded") {
@@ -645,9 +661,10 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
   test("q396 banding sweep: candidate nesting law and monotone recall") {
     import spark.implicits._
     val sig = Dedup.minhashSigs(spark, sf).localCheckpoint()
-    val c2 = Dedup.bandedCandidates(sig, 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val c4 = Dedup.bandedCandidates(sig, 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val c8 = Dedup.bandedCandidates(sig, 8).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // bands × rows: 2×8, 4×4, 8×2
+    def cand(rows: Int) = Dedup.bandCandidates(sig, sig, rows)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (c2, c4, c8) = (cand(8), cand(4), cand(2))
     assert(c2.subsetOf(c4), s"2x8 candidates not nested in 4x4: ${(c2 -- c4).take(5)}")
     assert(c4.subsetOf(c8), s"4x4 candidates not nested in 8x2: ${(c4 -- c8).take(5)}")
     // since r9 the sweep rides PORTABLE md5 signatures and its oracle
