@@ -30,23 +30,18 @@ object StreamingQueries {
     * µs TimestampType exactly as in [[Tables.events]] — both physical
     * encodings the driver has shipped are handled). The file source only
     * accepts directories, so the single-file table is staged as a symlink
-    * under /tmp (idempotent). */
+    * under /tmp (idempotent). Its schema comes from the file's footer
+    * ([[Tables.parquet]]), so building the stream runs no Spark job. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = Paths.get(s"$dir/events.parquet")
     val streamDir = Paths.get("/tmp/graft-stream", dir.replaceAll("[^A-Za-z0-9.]", "_"))
     Files.createDirectories(streamDir)
     val link = streamDir.resolve("events.parquet")
     if (!Files.exists(link)) Files.createSymbolicLink(link, path)
-    val schema = spark.read.parquet(path.toString).schema
-    val raw = spark.readStream.schema(schema).parquet(streamDir.toString)
-    schema("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _                => raw
-    }
+    val schema = Tables.parquet(spark, path.toString).schema
+    Tables.microsTs(spark.readStream.schema(schema).parquet(streamDir.toString))
   }
 
   /** Scale-adaptive state partition count for a streaming replay over the
