@@ -1,13 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json with the oracle SQL of exactly the entries run, for the
+  * DuckDB compare (`tools/oracle_check_strict.py`).
+  *
+  * Usage: graft.Verify <sfDir> <outDir> [names...] — with no names every
+  * entry runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // Optional extra args: run only these query names (builder iteration);
-    // the driver passes exactly two args, so its behavior is unchanged.
+    // Optional extra args: run only these query names; with exactly two
+    // args every entry runs and oracle_sql.json lists every oracle.
     val only = args.drop(2).toSet
     // SPARK_GRAFT_VERIFY_SKIP: comma-separated names to EXCLUDE — used by
     // the synthesized-sf1 strict sweep to leave out the named by-design
@@ -25,8 +29,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    def runs(name: String): Boolean = (only.isEmpty || only(name)) && !skip(name)
     SparkEntry.queries
-      .filter { case (name, _) => (only.isEmpty || only(name)) && !skip(name) }
+      .filter { case (name, _) => runs(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -47,6 +52,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => runs(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

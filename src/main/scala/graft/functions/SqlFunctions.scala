@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
 /** The engine's SQL-function table: the SQL name and builder of every
   * codegen'd kernel, declared once. The Column helpers (`minhash64`,
@@ -23,9 +23,18 @@ object SqlFunctions {
         s"$name expects a binary literal $sketch, got $other")
     }
 
+  /** The word-n-gram kernels take their gram length as a positive integer
+    * literal. */
+  private def ngrams(name: String, distinct: Boolean): Builder = {
+    case Seq(text, Literal(n: Int, IntegerType)) if n > 0 => WordNgrams(text, n, distinct)
+    case exprs => throw new IllegalArgumentException(
+      s"$name(text, n) expects n as a positive integer literal, got ${exprs.drop(1).mkString(", ")}")
+  }
+
   val table: Seq[(String, Builder)] = Seq(
     "graft_minhash64" -> (e => MinHash64(e(0))),
-    "graft_shingle_set" -> (e => ShingleSet3(e(0))),
+    "graft_word_ngrams" -> ngrams("graft_word_ngrams", distinct = false),
+    "graft_shingle_set" -> ngrams("graft_shingle_set", distinct = true),
     "graft_simhash64" -> (e => SimHash64(e(0))),
     "graft_simhash60_md5" -> (e => SimHash60Md5(e(0))),
     "graft_dot" -> (e => DotProductDouble(e(0), e(1))),

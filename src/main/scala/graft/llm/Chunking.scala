@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.GraftQuery
+import graft.functions.ShingleExpression.{shingleSet, wordNgrams}
 import graft.sources.Tables
 
 /** LLM-pipeline chunking + substring-level dedup (builder mandate: ops a
@@ -105,11 +106,7 @@ object Chunking {
        |ORDER BY doc_id, span_start""") { (spark, dir) =>
     import spark.implicits._
     val g = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .filter(size($"w") >= GramK)
-      .select($"doc_id", posexplode(
-        transform(sequence(lit(0), size($"w") - GramK),
-          p => md5(concat_ws(" ", slice($"w", p + 1, lit(GramK)))))))
+      .select($"doc_id", posexplode(transform(wordNgrams($"text", GramK), md5(_))))
       .toDF("doc_id", "pos", "gh")
       // materialized once: the dup census AND the hits semi-join both read
       // the positional gram stream, and the md5-per-position kernel is the
@@ -166,7 +163,8 @@ object Chunking {
       |ORDER BY doc_a, doc_b""") { (spark, dir) =>
     import spark.implicits._
     val t = 0.8
-    val sh = Dedup.shingleDocs(Tables.documents(spark, dir)) // (doc_id, s)
+    val sh = Tables.documents(spark, dir)
+      .select($"doc_id", explode(shingleSet($"text", 3)).as("s"))
     // Global rarity order: (df, s) — ties broken by the shingle text so the
     // order (and therefore the prefix) is deterministic on both engines.
     val df = sh.groupBy($"s").agg(count(lit(1)).as("df"))
@@ -227,10 +225,8 @@ object Chunking {
       |ORDER BY doc_id""") { (spark, dir) =>
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .filter(size($"t") >= 6)
-      .select($"doc_id", transform(sequence(lit(1), size($"t") - 2),
-        i => md5(concat_ws(" ", slice($"t", i, lit(3))))).as("gh"))
+      .filter(size(split($"text", " ")) >= 6)
+      .select($"doc_id", transform(wordNgrams($"text", 3), md5(_)).as("gh"))
       .select($"doc_id", explode(transform(sequence(lit(1), size($"gh") - 3),
         j => array_min(slice($"gh", j, lit(4))))).as("fp"))
       .distinct()
@@ -268,11 +264,7 @@ object Chunking {
        |ORDER BY doc_id""") { (spark, dir) =>
     import spark.implicits._
     val g = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("w"))
-      .filter(size($"w") >= GramK)
-      .select($"doc_id", explode(
-        transform(sequence(lit(0), size($"w") - GramK),
-          p => md5(concat_ws(" ", slice($"w", p + 1, lit(GramK)))))).as("gh"))
+      .select($"doc_id", explode(transform(wordNgrams($"text", GramK), md5(_))).as("gh"))
     val df = g.groupBy($"gh").agg(countDistinct($"doc_id").as("nd"))
     g.join(df, Seq("gh"))
       .groupBy($"doc_id")

@@ -88,16 +88,20 @@ object Curation {
   /** The q127 core over any (doc_id, text, …) frame — factored out for the
     * fixture spec, which plants one document per verdict (the driver corpus
     * contains no cross-doc exact duplicate, so the exact_dup arm would only
-    * be validated vacuously against the oracle). `nearPairs` is THE SCALE
-    * KNOB: the exact capped inverted index ([[Dedup.neardupPairs]], the
-    * oracle-able default) or the sub-quadratic MinHash+LSH path
-    * ([[Dedup.neardupPairsLsh]], q349) — at 100 TB the capstones ride the
-    * LSH path; the exact path is the small-sf verifier. */
+    * be validated vacuously against the oracle). `nearPairs` gives the
+    * near-dup pairs the clusters come from when no `clusterLabels` are
+    * passed; the default is the exact capped inverted index
+    * ([[Dedup.neardupPairs]]), which the fixture spec uses. The catalog
+    * entries pass memoized labels: q127 those of q45's exact pair set
+    * ([[Dedup.corpusExactClusters]]); q349 and q300 (like q343 and q398,
+    * which read the labels without curating) those of the sub-quadratic
+    * portable sketch-then-verify pairs ([[Dedup.corpusPortablePairs]] →
+    * [[Dedup.corpusPortableClusters]]), the path that scales. */
   private[llm] def curate(
       docs: org.apache.spark.sql.DataFrame,
       isEval: org.apache.spark.sql.Column,
       nearPairs: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        Dedup.neardupPairs(_),
+        d => Dedup.neardupPairs(Dedup.cappedShinglesOf(d)),
       contam: Option[org.apache.spark.sql.DataFrame] = None,
       clusterLabels: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession

@@ -45,28 +45,6 @@ object Dedup {
     * worst case (a shingle shared by k docs emits k² candidate pairs). */
   private[llm] val MaxShingleDf = 50
 
-  /** (doc_id, text) → distinct (doc_id, s) 3-gram word shingles.
-    * Guard `size(t) >= 3`: Spark's `sequence(1, n)` counts DOWN for n < 1. */
-  private[llm] def shingleDocs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(
-        transform(sequence(lit(1), size(col("t")) - 2),
-          i => concat_ws(" ", slice(col("t"), i, lit(3))))).as("s"))
-      .distinct()
-
-  /** Drop shingles whose document frequency exceeds maxDf. The hot set is
-    * tiny by construction (few shingles occur in >maxDf docs) → broadcast
-    * anti-join; the bulk (doc_id, s) stream never shuffles for the cap. */
-  private[llm] def capShingles(sh: org.apache.spark.sql.DataFrame, maxDf: Int): org.apache.spark.sql.DataFrame = {
-    val hot = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("s"))
-    // usingColumns joins move the key first; restore (doc_id, s) order so
-    // positional renames downstream (toDF) stay correct.
-    sh.join(broadcast(hot), Seq("s"), "left_anti").select(col("doc_id"), col("s"))
-  }
-
   /** Exact n-gram Jaccard near-dup pairs (similarity ≥ 0.8) via inverted
     * index on shingles — the oracle-checkable ground truth the approximate
     * ops are judged against. */
@@ -196,17 +174,19 @@ object Dedup {
     *
     * The capped-shingle family is ONE entry, "shingleSigs" = (doc_id, tk,
     * sig) from [[shingleSigsOf]]; [[corpusCappedShingles]],
-    * [[cappedShingleSets]] and [[minhashSigs]] are projections of it. */
+    * [[cappedShingleSets]] and [[minhashSigs]] are projections of it, and
+    * the "exactPairs" and "portableSigs" entries build on it (a nested
+    * memo: their first build also stores it). */
   private[llm] def corpusFrame(spark: org.apache.spark.sql.SparkSession, dir: String,
       tag: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     graft.engine.Memos.memo(spark, dir, tag)(graft.engine.Memos.checkpoint(build))
 
   /** Memoized corpus-level [[portableMinhashSigs]] (q494/q495/q508 + the
-    * portable pair stage all read it). */
+    * portable pair stage all read it), over the memoized capped shingles. */
   private[llm] def corpusPortableSigs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     corpusFrame(spark, dir, "portableSigs")(
-      portableMinhashSigs(Tables.documents(spark, dir)))
+      portableMinhashSigs(corpusCappedShingles(spark, dir)))
 
   /** Memoized corpus-level [[neardupPairsPortableLshVerified]], built on
     * the memoized signatures. */
@@ -216,11 +196,12 @@ object Dedup {
       neardupPairsPortableLshVerified(Tables.documents(spark, dir),
         Some(corpusPortableSigs(spark, dir))))
 
-  /** Memoized corpus-level [[neardupPairs]] (q45's exact pair set). */
+  /** Memoized corpus-level [[neardupPairs]] (q45's exact pair set), over
+    * the memoized capped shingles. */
   private[llm] def corpusExactPairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     corpusFrame(spark, dir, "exactPairs")(
-      neardupPairs(Tables.documents(spark, dir)))
+      neardupPairs(corpusCappedShingles(spark, dir)))
 
   /** Memoized corpus-level cluster labels (doc_id, cluster_id) over the
     * exact pair set — q365/q391/q407-class consumers need the LABELS, not
@@ -257,22 +238,30 @@ object Dedup {
 
   /** Memoized corpus-level (doc_id, tk, sig) — [[shingleSigsOf]] over the
     * documents table, materialized once per (session, dir). The one memo
-    * behind every capped-shingle consumer: the inverted-index queries
-    * (q399/q423/q499 via [[corpusCappedShingles]]) and the MinHash family
-    * (q371/q372/q385/q396 via [[minhashSigs]] and [[cappedShingleSets]]).
-    * Not a [[corpusFrame]]: `pin = true` already materializes the frame,
-    * so no second checkpoint goes on top. */
+    * behind every capped-shingle consumer: via [[corpusCappedShingles]] the
+    * co-shingle censuses (q399/q423/q437/q495/q499/q508), q112's delta
+    * dedup and the `exactPairs` and `portableSigs` memos (q45's exact pair
+    * set and everything that reads it; q494's portable signatures and the
+    * portable pair stage); via [[minhashSigs]] and [[cappedShingleSets]]
+    * the MinHash family (q371/q372/q385/q396). Not a [[corpusFrame]]:
+    * `pin = true` already materializes the frame, so no second checkpoint
+    * goes on top. */
   private def corpusShingleSigs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     graft.engine.Memos.memo(spark, dir, "shingleSigs")(
       shingleSigsOf(Tables.documents(spark, dir), pin = true))
 
-  /** Corpus-level capped (doc_id, s) shingle stream — the
-    * capShingles(shingleDocs(documents), MaxShingleDf) rows, as one explode
-    * of the memoized shingle sets (distinct per doc by construction). */
+  /** Corpus-level capped (doc_id, s) shingle stream — q45's similarity
+    * space, as one explode of the memoized shingle sets (distinct per doc
+    * by construction). */
   private[llm] def corpusCappedShingles(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     corpusShingleSigs(spark, dir).select(col("doc_id"), explode(col("tk")).as("s"))
+
+  /** [[corpusCappedShingles]] over any (doc_id, text, …) frame, unpinned. */
+  private[llm] def cappedShinglesOf(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    shingleSigsOf(docs, pin = false).select(col("doc_id"), explode(col("tk")).as("s"))
 
   /** Memoized corpus-level [[contamination]] on the standard doc_id%50
     * eval split — q114, q127 and q349 each re-ran the 5-gram explode +
@@ -284,24 +273,16 @@ object Dedup {
       contamination(Tables.documents(spark, dir),
         org.apache.spark.sql.functions.col("doc_id") % 50 === 0))
 
-  /** q45's core over any (doc_id, text, …) frame: exact shingle-Jaccard
-    * near-dup pairs (≥ 0.8), frequency-capped inverted index. Shared by the
-    * q100/q109 clustering queries and the q127 curation capstone. */
-  private[llm] def neardupPairs(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sh = capShingles(shingleDocs(docs), MaxShingleDf)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.toDF("doc_a", "s")
-    val b = sh.toDF("doc_b", "s")
-    val pairs = a.join(b, Seq("s")).filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared"))
-    val jac = $"shared" / ($"na" + $"nb" - $"shared")
-    pairs
-      .join(broadcast(sizes.toDF("doc_a", "na")), Seq("doc_a"))
-      .join(broadcast(sizes.toDF("doc_b", "nb")), Seq("doc_b"))
+  /** q45's core over a capped (doc_id, s) shingle stream
+    * ([[corpusCappedShingles]] or [[cappedShinglesOf]]): exact
+    * shingle-Jaccard near-dup pairs (≥ 0.8) from the co-shingle census.
+    * Shared by the q100/q109 clustering queries and the q127 curation
+    * capstone. */
+  private[llm] def neardupPairs(sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val jac = col("shared") / (col("na") + col("nb") - col("shared"))
+    coShinglePairs(sh)
       .filter(jac >= 0.8)
-      .select($"doc_a", $"doc_b", $"shared", stat(jac).as("jaccard"))
+      .select(col("doc_a"), col("doc_b"), col("shared"), stat(jac).as("jaccard"))
   }
 
   /** MinHash+LSH near-dup (MLlib): shingles → binary HashingTF (2^18) →
@@ -441,16 +422,17 @@ object Dedup {
   /** The one builder of q45's capped similarity space over any (doc_id,
     * text, …) frame: (doc_id, tk, sig) — each document's sorted distinct
     * 3-gram shingle set and its 16-permutation [[graft.functions.MinHash64]]
-    * signature. Row for row it equals the reference chain
-    * `capShingles(shingleDocs(docs), MaxShingleDf)` →
-    * `sort_array(collect_list(s))` → `minhash64` (LlmOpsSpec pins this),
-    * without that chain's explode → distinct → anti-join → regroup:
+    * signature. Row for row it equals the reference chain — explode the
+    * 3-grams, `distinct()` the (doc_id, s) rows, anti-join the shingles of
+    * df > [[MaxShingleDf]], `sort_array(collect_list(s))` → `minhash64`
+    * (LlmOpsSpec writes that chain out and pins the equality) — without
+    * its explode → distinct → anti-join → regroup:
     *  - the (doc_id, text) scan is hash-partitioned on doc_id into one
     *    partition per core — an explicit count, so AQE cannot coalesce it
     *    back into the single task a one-row-group parquet file yields — and
-    *    each document's set ([[graft.functions.ShingleSet3]], the native
-    *    form of `array_sort(array_distinct(...))` over the shingles) and
-    *    signature come out of the same projection;
+    *    each document's set ([[graft.functions.WordNgrams]]' shingle set,
+    *    the native form of `array_sort(array_distinct(...))` over the
+    *    shingles) and signature come out of the same projection;
     *  - the df > [[MaxShingleDf]] hot set: [[dfUpperBound]] rules it empty
     *    in the same job that computes the sets; only a bound above the cap
     *    runs the exact aggregate. Only a non-empty hot set builds a capped
@@ -479,7 +461,7 @@ object Dedup {
       .select(col("doc_id"), col("text"))
       .filter(col("text").like("% % %"))
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), ShingleExpression.shingleSet(col("text")).as("tk")))
+      .select(col("doc_id"), ShingleExpression.shingleSet(col("text"), 3).as("tk")))
     // the df bound below is the action that stores the memo
     val first = if (pin) graft.engine.Memos.deferredCheckpoint(built) else built
     val hot =
@@ -1215,20 +1197,21 @@ object Dedup {
       |WHERE d.source = 'src0'
       |ORDER BY d.doc_id""") { (spark, dir) =>
     import spark.implicits._
-    deltaDedup(Tables.documents(spark, dir), $"source" === "src0")
+    deltaDedup(Tables.documents(spark, dir), $"source" === "src0", corpusCappedShingles(spark, dir))
   }
 
-  /** The q112 classification core over any (doc_id, text, …) frame —
-    * factored out so the fixture spec can plant all three statuses (the
-    * driver corpus happens to contain no cross-source exact duplicate, so
-    * the exact_dup arm would otherwise only be validated vacuously). */
+  /** The q112 classification core over any (doc_id, text, …) frame and
+    * its capped (doc_id, s) shingle stream `sh` — factored out so the
+    * fixture spec can plant all three statuses (the test-data corpus
+    * happens to contain no cross-source exact duplicate, so the exact_dup
+    * arm would otherwise only be validated vacuously). */
   private[llm] def deltaDedup(
       docs: org.apache.spark.sql.DataFrame,
-      isDelta: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+      isDelta: org.apache.spark.sql.Column,
+      sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val deltaIds = docs.filter(isDelta).select($"doc_id")
-    val sh = capShingles(shingleDocs(docs), MaxShingleDf)
     val shD = sh.join(broadcast(deltaIds), Seq("doc_id"), "left_semi").toDF("da", "s")
     val shC = sh.join(broadcast(deltaIds), Seq("doc_id"), "left_anti").toDF("db", "s")
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
@@ -1318,11 +1301,7 @@ object Dedup {
     import spark.implicits._
     val g = Tables.documents(spark, dir)
       .select($"doc_id", ($"doc_id" % 50 === 0).as("is_eval"),
-        split($"text", " ").as("t"))
-      .filter(size($"t") >= 8)
-      .select($"doc_id", $"is_eval", explode(array_distinct(
-        transform(sequence(lit(1), size($"t") - 7),
-          i => concat_ws(" ", slice($"t", i, lit(8)))))).as("s"))
+        explode(ShingleExpression.shingleSet($"text", 8)).as("s"))
     val ev = g.filter($"is_eval").select($"s").distinct()
     val tr = g.filter(!$"is_eval").select($"doc_id", $"s")
     val tot = tr.groupBy($"doc_id").agg(count(lit(1)).cast("long").as("n_grams"))
@@ -1338,22 +1317,20 @@ object Dedup {
   /** The q114 core over any (doc_id, text, …) frame — factored out for the
     * fixture spec (planted contaminated/clean docs).
     *
-    * Within-doc shingle dedup is `array_distinct` BEFORE the explode — a
-    * per-row projection — never a global `distinct()`: the latter would
-    * shuffle the entire corpus shingle stream just to collapse duplicates
-    * that the final `countDistinct` ignores anyway (plan-audited: the train
-    * side is scan → explode → broadcast-join with zero pre-join exchanges). */
+    * Within-doc shingle dedup is the kernel's shingle SET before the
+    * explode — a per-row projection — never a global `distinct()`: the
+    * latter would shuffle the entire corpus shingle stream just to collapse
+    * duplicates that the final `countDistinct` ignores anyway (plan-audited:
+    * the train side is scan → explode → broadcast-join with zero pre-join
+    * exchanges). */
   private[llm] def contamination(
       docs: org.apache.spark.sql.DataFrame,
       isEval: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sh = docs
-      .select(col("doc_id"), isEval.as("is_eval"), split($"text", " ").as("t"))
-      .filter(size($"t") >= 5)
-      .select($"doc_id", $"is_eval", explode(array_distinct(
-        transform(sequence(lit(1), size($"t") - 4),
-          i => concat_ws(" ", slice($"t", i, lit(5)))))).as("s"))
+      .select(col("doc_id"), isEval.as("is_eval"),
+        explode(ShingleExpression.shingleSet($"text", 5)).as("s"))
     val ev = sh.filter($"is_eval").select($"doc_id".as("eval_id"), $"s")
     val tr = sh.filter(!$"is_eval").select($"doc_id", $"s")
     tr.join(broadcast(ev), Seq("s"))
@@ -2248,14 +2225,15 @@ object Dedup {
       |sig AS (SELECT doc_id, i, CAST(min((lo + i * hi) % 72057594037927936) AS BIGINT) AS minhash
       |        FROM hh, (SELECT unnest(generate_series(0, 15)) AS i) g GROUP BY 1, 2)""".stripMargin
 
-  /** The engine side of [[portableSigSql]]: (doc_id, i, minhash) over the
-    * capped shingle space. Pure relational Spark — no kernel needed: one
-    * md5 + two conv per shingle, a 16-way explode, one min hash-agg. */
+  /** The engine side of [[portableSigSql]]: (doc_id, i, minhash) over a
+    * capped (doc_id, s) shingle stream ([[corpusCappedShingles]] or
+    * [[cappedShinglesOf]]). Pure relational Spark — one md5 + two conv per
+    * shingle, a 16-way explode, one min hash-agg. */
   private[llm] def portableMinhashSigs(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
+      sh: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark = sh.sparkSession
     import spark.implicits._
-    capShingles(shingleDocs(docs), MaxShingleDf)
+    sh
       .select(col("doc_id"),
         conv(substring(md5(col("s")), 1, 14), 16, 10).cast("long").as("lo"),
         conv(substring(md5(col("s")), 17, 14), 16, 10).cast("long").as("hi"))
@@ -2293,8 +2271,10 @@ object Dedup {
   private[llm] def neardupPairsPortableLshVerified(
       docs: org.apache.spark.sql.DataFrame,
       sigOpt: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
-    val sig = portableSigArrays(sigOpt.getOrElse(portableMinhashSigs(docs)))
-    verifyJaccard(bandCandidates(sig, sig, 4), cappedShingleSetsOf(docs))
+    val tk = cappedShingleSetsOf(docs)
+    val sig = portableSigArrays(sigOpt.getOrElse(
+      portableMinhashSigs(tk.select(col("doc_id"), explode(col("tk")).as("s")))))
+    verifyJaccard(bandCandidates(sig, sig, 4), tk)
       .select(col("doc_a"), col("doc_b"))
   }
 
@@ -2759,7 +2739,7 @@ object Dedup {
       |GROUP BY d.source ORDER BY d.source""") { (spark, dir) =>
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-    val sh = shingleDocs(docs)
+    val sh = docs.select($"doc_id", explode(ShingleExpression.shingleSet($"text", 3)).as("s"))
     val hb = sh.select($"doc_id", $"s",
       conv(substring(md5($"s"), 1, 14), 16, 10).cast("long").as("lo"),
       conv(substring(md5($"s"), 17, 14), 16, 10).cast("long").as("hi"))

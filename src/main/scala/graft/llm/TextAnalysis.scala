@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 import graft.engine.GraftQuery
+import graft.functions.ShingleExpression.wordNgrams
 import graft.operators.RelationalCore.stat
 import graft.sources.Tables
 
@@ -134,11 +135,9 @@ object TextAnalysis {
       |ORDER BY doc_id""") { (spark, dir) =>
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .filter(size($"t") >= 3)
+      .filter(size(split($"text", " ")) >= 3)
       .select($"doc_id",
-        array_min(transform(sequence(lit(1), size($"t") - 2),
-          i => sha2(concat_ws(" ", slice($"t", i, lit(3))), 256))).as("fingerprint"))
+        array_min(transform(wordNgrams($"text", 3), sha2(_, 256))).as("fingerprint"))
       .orderBy($"doc_id")
   }
 
@@ -231,11 +230,7 @@ object TextAnalysis {
       |ORDER BY shingle""") { (spark, dir) =>
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .filter(size($"t") >= 5)
-      .select($"doc_id", explode(
-        transform(sequence(lit(1), size($"t") - 4),
-          i => concat_ws(" ", slice($"t", i, lit(5))))).as("shingle"))
+      .select($"doc_id", explode(wordNgrams($"text", 5)).as("shingle"))
       .groupBy($"shingle")
       .agg(countDistinct($"doc_id").as("df"), count(lit(1)).as("n_occ"))
       .filter($"df" >= 3)
@@ -263,11 +258,8 @@ object TextAnalysis {
     import spark.implicits._
     val dupFrac = lit(1) - $"n_distinct" / $"n_bigrams".cast("double")
     Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .filter(size($"t") >= 2)
-      .select($"doc_id",
-        transform(sequence(lit(1), size($"t") - 1),
-          i => concat_ws(" ", slice($"t", i, lit(2)))).as("bg"))
+      .filter(size(split($"text", " ")) >= 2)
+      .select($"doc_id", wordNgrams($"text", 2).as("bg"))
       .select($"doc_id", size($"bg").as("n_bigrams"),
         size(array_distinct($"bg")).as("n_distinct"))
       .select($"doc_id", $"n_bigrams", $"n_distinct",
@@ -805,10 +797,7 @@ object TextAnalysis {
       |ORDER BY f.r""") { (spark, dir) =>
     import spark.implicits._
     val tc = Tables.documents(spark, dir)
-      .select(split($"text", " ").as("t"))
-      .filter(size($"t") >= 3)
-      .select(explode(transform(sequence(lit(1), size($"t") - 2),
-        i => concat_ws(" ", slice($"t", i, lit(3))))).as("w"))
+      .select(explode(wordNgrams($"text", 3)).as("w"))
       .groupBy($"w").agg(count(lit(1)).cast("long").as("r"))
     val ff = tc.groupBy($"r").agg(count(lit(1)).cast("long").as("n_r"))
       .localCheckpoint(true) // frequency-of-frequency census

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.GraftQuery
+import graft.functions.ShingleExpression.shingleSet
 import graft.sources.Tables
 
 /** Graph analytics over the co-order part graph: two parts are adjacent when
@@ -565,11 +566,7 @@ object Graph {
       |ORDER BY doc_id""") { (spark, dir) =>
     import spark.implicits._
     val g = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("t"))
-      .filter(size($"t") >= 5)
-      .select($"doc_id", explode(array_distinct(
-        transform(sequence(lit(1), size($"t") - 4),
-          i => concat_ws(" ", slice($"t", i, lit(5)))))).as("s"))
+      .select($"doc_id", explode(shingleSet($"text", 5)).as("s"))
     // df = 2 means the gram lives in EXACTLY two docs (g is doc-distinct),
     // so its one ordered pair is (min(doc_id), max(doc_id)) — the rare-df
     // census, the pair join, and both of its 5-gram re-explosions collapse

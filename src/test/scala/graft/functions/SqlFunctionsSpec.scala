@@ -28,7 +28,8 @@ class SqlFunctionsSpec extends AnyFunSuite with SparkFixture {
   /** name -> (arguments, the Column helper applied to them). */
   private val helpers: Seq[(String, Seq[Column], Column)] = Seq(
     ("graft_minhash64", Seq(col("toks")), MinHashExpression.minhash64(col("toks"))),
-    ("graft_shingle_set", Seq(col("text")), ShingleExpression.shingleSet(col("text"))),
+    ("graft_word_ngrams", Seq(col("text"), lit(2)), ShingleExpression.wordNgrams(col("text"), 2)),
+    ("graft_shingle_set", Seq(col("text"), lit(3)), ShingleExpression.shingleSet(col("text"), 3)),
     ("graft_simhash64", Seq(col("toks")), SimHashExpression.simhash64(col("toks"))),
     ("graft_simhash60_md5", Seq(col("toks")), SimHashExpression.simhash60md5(col("toks"))),
     ("graft_dot", Seq(col("va"), col("vb")), VectorExpressions.graftDot(col("va"), col("vb"))),

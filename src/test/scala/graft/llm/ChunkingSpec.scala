@@ -9,6 +9,16 @@ import graft.SparkFixture
 class ChunkingSpec extends AnyFunSuite with SparkFixture {
   import org.apache.spark.sql.functions._
 
+  /** Distinct (doc_id, s) 3-gram shingles of `split(text, ' ')`, written
+    * out as the reference q203's pipeline is checked against. */
+  private def shingles(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val t = split(col("text"), " ")
+    docs.filter(size(t) >= 3)
+      .select(col("doc_id"), explode(transform(sequence(lit(1), size(t) - 2),
+        i => concat_ws(" ", slice(t, i, lit(3))))).as("s"))
+      .distinct()
+  }
+
   test("q199: a planted shared passage mines exactly one maximal span per doc") {
     import spark.implicits._
     val passage = (1 to 12).map(i => s"p$i").mkString(" ") // 12 shared words
@@ -53,7 +63,7 @@ class ChunkingSpec extends AnyFunSuite with SparkFixture {
       (100L + i, (1 to 40).map(j => s"u${i}_$j").mkString(" ")))
     val docs = (near ++ far).toDF("doc_id", "text")
     val t = 0.8
-    val sh = Dedup.shingleDocs(docs)
+    val sh = shingles(docs)
     val df = sh.groupBy($"s").agg(count(lit(1)).as("df"))
     val ranked = sh.join(broadcast(df), Seq("s"))
       .withColumn("r", row_number().over(org.apache.spark.sql.expressions.Window
@@ -147,7 +157,7 @@ class ChunkingSpec extends AnyFunSuite with SparkFixture {
         (100L + id, if (rnd.nextBoolean()) text else text + " " + vocab(rnd.nextInt(vocab.size)))
       }
       val docs = (base ++ dups).toDF("doc_id", "text")
-      val sh = Dedup.shingleDocs(docs)
+      val sh = shingles(docs)
       val df = sh.groupBy($"s").agg(count(lit(1)).as("df"))
       val ranked = sh.join(broadcast(df), Seq("s"))
         .withColumn("r", row_number().over(org.apache.spark.sql.expressions.Window.partitionBy($"doc_id").orderBy($"df", $"s")))

@@ -8,6 +8,21 @@ import graft.SparkFixture
 class LlmOpsSpec extends AnyFunSuite with SparkFixture {
   import org.apache.spark.sql.functions._
 
+  /** The explode → distinct → cap chain that [[Dedup.shingleSigsOf]]
+    * replaces, written out as the independent reference: the distinct
+    * (doc_id, s) 3-gram shingles of `split(text, ' ')`, minus every shingle
+    * found in more than `maxDf` documents. */
+  private def referenceCappedShingles(docs: org.apache.spark.sql.DataFrame,
+      maxDf: Int): org.apache.spark.sql.DataFrame = {
+    val t = split(col("text"), " ")
+    val sh = docs.filter(size(t) >= 3)
+      .select(col("doc_id"), explode(transform(sequence(lit(1), size(t) - 2),
+        i => concat_ws(" ", slice(t, i, lit(3))))).as("s"))
+      .distinct()
+    val hot = sh.groupBy(col("s")).agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
+    sh.join(broadcast(hot), Seq("s"), "left_anti").select(col("doc_id"), col("s"))
+  }
+
   test("PQ ANN: full shortlist reduces exactly to brute force; shortlist=50 recall holds") {
     import spark.implicits._
     val exact = Similarity.q48KnnBruteForce.fn(spark, sf)
@@ -154,12 +169,13 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
     val boiler = "the quick brown fox jumps over the lazy dog again and again"
     val docs = (1L to 80L).map(i => (i, s"$boiler unique$i marker$i tail$i"))
       .toDF("doc_id", "text")
-    val sh = Dedup.shingleDocs(docs).cache()
+    val sh = docs.select($"doc_id",
+      explode(graft.functions.ShingleExpression.shingleSet($"text", 3)).as("s")).cache()
     def pairCount(s: org.apache.spark.sql.DataFrame): Long =
       s.toDF("ida", "sa").join(s.toDF("idb", "sb"), $"sa" === $"sb" && $"ida" < $"idb").count()
     val uncapped = pairCount(sh)
     assert(uncapped >= 80L * 79 / 2, s"fixture should blow up uncapped, got $uncapped")
-    val capped = Dedup.capShingles(sh, 50).cache()
+    val capped = Dedup.cappedShinglesOf(docs).cache() // shingleSigsOf, tk exploded
     val cappedPairs = pairCount(capped)
     assert(cappedPairs < uncapped / 100, s"cap should collapse the join: $cappedPairs vs $uncapped")
     // no surviving shingle exceeds the document-frequency cap
@@ -176,7 +192,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
       df.select($"doc_id", $"tk", $"sig").collect()
         .map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[Long](2))).toSeq.sortBy(_._1)
     def reference(docs: org.apache.spark.sql.DataFrame): Seq[Row3] =
-      rows(Dedup.capShingles(Dedup.shingleDocs(docs), 50)
+      rows(referenceCappedShingles(docs, 50)
         .groupBy($"doc_id").agg(sort_array(collect_list($"s")).as("tk"))
         .withColumn("sig", MinHashExpression.minhash64($"tk")))
     // ids, not a count: an earlier test's non-blocking unpersist may still
@@ -366,7 +382,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
       (102L, wNear, "delta"),                       // near-dup of doc 1
       (103L, u, "delta"))                           // unique
       .toDF("doc_id", "text", "source")
-    val got = Dedup.deltaDedup(docs, col("source") === "delta")
+    val got = Dedup.deltaDedup(docs, col("source") === "delta", Dedup.cappedShinglesOf(docs))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got === Map(101L -> "exact_dup", 102L -> "near_dup", 103L -> "unique"))
   }
@@ -475,7 +491,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
     val docs = graft.sources.Tables.documents(spark, sf)
     val lab = Dedup.minLabelComponents(
         docs.select($"doc_id"),
-        Dedup.neardupPairs(docs).select($"doc_a", $"doc_b"))
+        Dedup.neardupPairs(Dedup.cappedShinglesOf(docs)).select($"doc_a", $"doc_b"))
       .toDF("doc_id", "cluster_id")
     assert(Dedup.guardClusterSizes(lab).count() === docs.count())
     // a synthetic mega-cluster (cap+1 members under one label) fails loudly
@@ -510,7 +526,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
   test("portable-LSH verified pairs equal the exact capped-index pairs (q349's strict-oracle precondition)") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sf)
-    val exact = Dedup.neardupPairs(docs).select($"doc_a", $"doc_b")
+    val exact = Dedup.neardupPairs(Dedup.cappedShinglesOf(docs)).select($"doc_a", $"doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val port = Dedup.neardupPairsPortableLshVerified(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -524,7 +540,7 @@ class LlmOpsSpec extends AnyFunSuite with SparkFixture {
   test("slice-equality banding of portable signatures equals the oracle's md5 band-key candidates") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sf)
-    val long = Dedup.portableMinhashSigs(docs).localCheckpoint()
+    val long = Dedup.portableMinhashSigs(Dedup.cappedShinglesOf(docs)).localCheckpoint()
     val sig = Dedup.portableSigArrays(long)
     assert(sig.count() > 1 && sig.filter(size($"sig") =!= 16).isEmpty)
     for (rows <- Seq(2, 4, 8)) {

@@ -11,9 +11,11 @@ file without headers is one entry named after the file, minus a
 Ids that differ between runs of the same plan are masked before comparing:
 expression ids (`#123`, `#123L`), `[plan_id=…]`, RDD ids
 (`MapPartitionsRDD[8]`), the source lines of RDD call sites
-(`Memos.scala:51`), object identity hashes (`UnsafeArrayData@582dcbb3`)
-and the per-run numeric suffix of scratch outputs
-(`/tmp/graft-io/orders_part_39121450542178`).
+(`Memos.scala:51`), object identity hashes (`UnsafeArrayData@582dcbb3`),
+the per-run numeric suffix of scratch outputs
+(`/tmp/graft-io/orders_part_39121450542178`) and the JVM-wide counter in
+lambda variable names (`lambda x_17#`, numbered by how many lambdas the
+process built before).
 sbt's own `[info]`/`[warn]`/`[error]`/`[success]` lines are ignored.
 
 Prints one `equal` / `DIFFERS` / `MISSING` line per entry (all entries of
@@ -34,6 +36,7 @@ MASKS = [
     (re.compile(r"(\.scala):\d+"), r"\1:_"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@_"),
     (re.compile(r"(/graft-io/\w+?)_\d{6,}\b"), r"\1_N"),
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1_N#"),
 ]
 
 
